@@ -2,11 +2,16 @@
 
 The container has no PIL/libjpeg, so the engine ships its own tiny codec
 (the reference uses PIL: /root/reference/py3dtilers/Texture/texture.py:86-118,
-atlas re-encode at atlas_node.py:110-132). Two formats:
+atlas re-encode at atlas_node.py:110-132). Two formats, each a
+delta-filtered pixel stream under one deflate layer:
 
-- ``png`` rows  -> RAW1: lossless (header + raw uint8 HxWx3)
-- ``jpg`` rows  -> QNT1: lossy uniform quantization, step 4 -> max abs error 2,
+- ``png`` rows  -> lossless (header + raw uint8 HxWx3)
+- ``jpg`` rows  -> lossy uniform quantization, step 4 -> max abs error 2,
   PSNR ~= 46 dB, comfortably above the BASELINE.json 40 dB gate.
+
+Members are written as ``RAWV``/``QNTV`` (vertical delta), atlases as
+``RAWD``/``QNTD`` (horizontal delta); decode also reads the round-5
+``RAWZ``/``QNTZ`` blobs.
 
 This keeps the *Spark-side plumbing real* (binary columns, Arrow batches,
 decode/encode inside pandas UDFs, per-tile atlas packing) while the codec

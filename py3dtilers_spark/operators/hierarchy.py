@@ -150,13 +150,7 @@ def manifest(tree_df: DataFrame) -> dict:
     has ~2 * n_leaves nodes — thousands, not billions — so driver collect is
     the correct move, exactly like the reference's tileset.json write. At
     tile counts beyond driver memory use write_manifest_sharded instead."""
-    rows = {r["tile_id"]: r.asDict() for r in tree_df.collect()}
-    children = _children_map(rows)
-    return {
-        "asset": {"version": "1.0", "generator": "py3dtilers_spark"},
-        "geometricError": rows[""]["geometric_error"] if "" in rows else LEAF_GE,
-        "root": _node_dict(rows, children, "") if "" in rows else {},
-    }
+    return manifest_from_rows({r["tile_id"]: r.asDict() for r in tree_df.collect()})
 
 
 def check_nesting(tree_df: DataFrame) -> int:
@@ -178,11 +172,6 @@ def check_nesting(tree_df: DataFrame) -> int:
         )
     )
     return bad.count()
-
-
-def write_manifest(tree_df: DataFrame, path: str) -> None:
-    with open(path, "w") as fh:
-        json.dump(manifest(tree_df), fh)
 
 
 def write_manifest_sharded(tree_df: DataFrame, out_dir: str, shard_depth: int = 2) -> dict:
@@ -259,9 +248,7 @@ def write_manifest_sharded(tree_df: DataFrame, out_dir: str, shard_depth: int = 
         r["tile_id"]: r.asDict()
         for r in tree_df.where(F.length("tile_id") < shard_depth).collect()
     }
-    rows = {**top_rows, **shard_rows}
-    children = _children_map(rows)
-    root = _node_dict(rows, children, "") if "" in rows else {}
+    m = manifest_from_rows({**top_rows, **shard_rows})
 
     def stubify(node: dict) -> dict:
         if node["tile_id"] in shard_rows:
@@ -272,11 +259,8 @@ def write_manifest_sharded(tree_df: DataFrame, out_dir: str, shard_depth: int = 
             node["children"] = [stubify(c) for c in node["children"]]
         return node
 
-    m = {
-        "asset": {"version": "1.0", "generator": "py3dtilers_spark"},
-        "geometricError": rows[""]["geometric_error"] if "" in rows else LEAF_GE,
-        "root": stubify(root) if root else {},
-    }
+    if m["root"]:
+        m["root"] = stubify(m["root"])
     with open(os.path.join(out_dir, "tileset.json"), "w") as fh:
         json.dump(m, fh)
     # counts for the caller (computed from the shard summaries + the shallow
@@ -364,7 +348,7 @@ def rollup_rows_local(leaf_rows) -> dict:
 
 
 def manifest_from_rows(rows: dict) -> dict:
-    """Same tileset.json dict as manifest(), from an in-memory row map."""
+    """tileset.json dict from an in-memory {tile_id: row dict} tree map."""
     children = _children_map(rows)
     return {
         "asset": {"version": "1.0", "generator": "py3dtilers_spark"},

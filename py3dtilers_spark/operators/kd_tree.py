@@ -22,9 +22,10 @@ Scale notes: exact mode costs one hash-shuffle + in-partition sort per level
 (log2(N / kd_tree_max) levels; ~11 at 10^12 rows with max=500 it is 31 levels
 — each a single window over cells that halve in size every level, so total
 shuffled bytes per level stay constant ~= dataset size; AQE coalesces the
-tail). Scale mode (exact=False) replaces the per-row window with a
-percentile_approx median per cell + broadcast join: no in-partition sort and
-leaf sizes within the approximation error of the quantile sketch.
+tail). Scale mode (exact=False, ``kd_sample_walk``) builds the whole split
+tree on the driver from a bounded centroid sample and broadcasts it; every
+row is then assigned by a vectorized tree walk in a pandas UDF: no shuffle,
+no sort, and leaf sizes within the sampling error.
 """
 from __future__ import annotations
 

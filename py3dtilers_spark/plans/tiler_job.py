@@ -1,15 +1,16 @@
-"""End-to-end tiling pipeline: the engine's equivalent of
-create_tileset_from_feature_list (/root/reference/py3dtilers/Common/tiler.py:231-271)
-+ FromGeometryTreeToTileset (tileset_creation.py:27-139), restructured as five
-DataFrame stages (SURVEY.md section 7.1):
+"""End-to-end tiling pipeline: the engine's equivalent of the reference's
+create_tileset_from_feature_list (py3dtilers/Common/tiler.py:231-271)
++ FromGeometryTreeToTileset (tileset_creation.py:27-139), restructured as one
+chain of DataFrame stages (SURVEY.md section 7.1):
 
-  scan features -> kd partition -> per-tile encode (applyInPandas) ->
-  hierarchy roll-up -> manifest + lineage
+  scan features -> kd assign (exact or sample walk) -> one tile shuffle ->
+  streaming per-tile encode (mapInPandas) -> per-tile leaf stats ->
+  lineage + hierarchy roll-up + manifest (local or sharded finish)
 
 Unlike the reference (which interleaves per-tile SQL fetch + encode + file
 write on one thread, the N+1 pattern of CityTiler.py:76-96), geometry/payload
 flows through ONE scan and ONE shuffle keyed by tile_id; every tile encodes in
-parallel; the driver only writes the (tiny) manifest.
+parallel; the tree rolls up from the per-tile stats, never from the rows.
 
 Checkpoint/lineage (north rule; no reference counterpart): every encoded tile
 appends a lineage row (run_id, cell_id=tile_id, row_count, checksum). A
@@ -29,10 +30,28 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..data.features import features_df
+from ..data.synth_images import attach_bytes
 from ..functions.imaging import _scratch, decode_into, encode, shelf_pack
-from ..operators.hierarchy import manifest, tile_tree, tile_tree_from_stats
+from ..operators import hierarchy
+from ..operators.hierarchy import (
+    manifest_from_rows,
+    rollup_rows_local,
+    tile_stats,
+    tile_tree_from_stats,
+)
 from ..operators.kd_tree import kd_assign, kd_sample_walk
 
+# unused here; kept importable because perfbench/tracing.py patches them by name
+from ..operators.hierarchy import manifest, tile_tree  # noqa: F401
+
+# encode tasks are sized by their OUTPUT (~35k payload rows each): large
+# per-task payload buffers degrade superlinearly (page-fault pressure), and
+# AQE only sees the tiny columnar input
+ROWS_PER_TASK = 35_000
+SLIM_COLS = ["image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"]
+META_COLS = [
+    "tile_id", "n_features", "checksum", "xmin", "xmax", "ymin", "ymax", "zmin", "zmax",
+]
 ENCODED_SCHEMA = (
     "tile_id string, n_features bigint, atlas binary, atlas_w int, atlas_h int,"
     " batch_json string, checksum string,"
@@ -79,7 +98,7 @@ def encode_tile(pdf: pd.DataFrame) -> pd.DataFrame:
     decode member images, shelf-pack into one atlas, re-encode (lossless iff
     every member is lossless), emit batch table json + checksum.
 
-    Runs as one applyInPandas task per tile — all images of a tile are
+    Called once per tile by the streaming encoder — all images of a tile are
     co-partitioned by the kd shuffle, exactly the reference's invariant that
     a tile's textures are atlased together."""
     pdf = pdf.sort_values("image_id", kind="mergesort").reset_index(drop=True)
@@ -196,49 +215,6 @@ def encode_tiles_stream(tiled: DataFrame, files_dir: str | None = None) -> DataF
     return tiled.mapInPandas(gen, ENCODED_SCHEMA)
 
 
-def encode_tiles_from_slim(pre: DataFrame, files_dir: str | None = None) -> DataFrame:
-    """Fused synth+encode streaming encoder: input is the SLIM row set
-    (tile_id, image_id, w, h, fmt, caption, phash), hash-partitioned and
-    sorted by tile_id. Payload bytes are synthesized and consumed inside the
-    same Python worker — zero Arrow hops for the heavy column. One shuffle
-    of slim columns is the pipeline's total shuffle volume."""
-    from ..functions.imaging import synth_encode_batch
-
-    def gen(batches):
-        buf: list[pd.DataFrame] = []
-        cur = None
-
-        def flush():
-            pdf = pd.concat(buf, ignore_index=True) if len(buf) > 1 else buf[0]
-            pdf = pdf.copy()
-            pdf["bytes"] = synth_encode_batch(
-                pdf["phash"].to_numpy(),
-                pdf["w"].to_numpy(),
-                pdf["h"].to_numpy(),
-                pdf["fmt"].to_numpy(),
-            )
-            return _sink_tile_payload(encode_tile(pdf), files_dir)
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            tids = pdf["tile_id"].to_numpy()
-            change = np.flatnonzero(tids[1:] != tids[:-1]) + 1
-            starts = np.concatenate(([0], change))
-            ends = np.concatenate((change, [len(pdf)]))
-            for s, e in zip(starts, ends):
-                tid = tids[s]
-                if cur is not None and tid != cur and buf:
-                    yield flush()
-                    buf = []
-                cur = tid
-                buf.append(pdf.iloc[s:e])
-        if buf:
-            yield flush()
-
-    return pre.mapInPandas(gen, ENCODED_SCHEMA)
-
-
 def run_tiler(
     spark: SparkSession,
     sf_dir: str,
@@ -250,20 +226,20 @@ def run_tiler(
     resume: bool = False,
     fail_after_tiles: int | None = None,
     features: "DataFrame | None" = None,
-    payload_source: str = "synth",
+    payload_source: str = "column",
     n_rows_hint: int | None = None,
     manifest_shard_depth: int | None = None,
     tile_sink: str = "parquet",
 ) -> dict:
     """Execute the pipeline; returns summary metrics (incl. per-phase secs).
 
-    payload_source:
-      "synth"  — features carries no bytes; payload pixels are synthesized
-                 post-shuffle from phash (test/sandbox mode).
-      "column" — features HAS a `bytes` binary column (the BASELINE.json
-                 input_hint table shape): bytes ride the one tile shuffle and
-                 are decoded by the streaming encoder. The kd branch and tree
-                 roll-up run on column-pruned scans that never touch bytes.
+    Input: ``features`` (a table with the features schema; its ``bytes``
+    column is the payload) or, when it is None, ``features_df(sf_dir)`` with
+    bytes attached by ``attach_bytes`` on the encode branch only.
+    exact: exact kd (``kd_assign``) joined back to the payload rows, else
+    the sample-walk kd assigned map-side.
+    payload_source: "column" is the only mode (payload bytes always come
+    from the input table); kept because perfbench/harness.py passes it.
     fail_after_tiles: test hook — encode only the first K tiles (by path
     order) then 'crash', leaving a partial lineage for resume tests.
     tile_sink: "parquet" keeps payload blobs in the tiles parquet (the
@@ -271,33 +247,36 @@ def run_tiler(
     to tiles_files/<tile_id>.bin from the Python worker (the 3D Tiles
     per-tile-file layout; on a cluster this is shared/object storage) and
     the parquet carries metadata only — the scale mode.
+    Returns ``finish`` = "local" (driver roll-up of the leaf stats) or
+    "sharded:d<k>" (distributed roll-up, executor-written subtree tilesets).
     """
     import time
 
+    if payload_source != "column":
+        raise ValueError(
+            f"payload_source={payload_source!r}: the 'synth' payload source was"
+            " removed; payload bytes always come from the input table"
+        )
+    if features is not None and with_payload and "bytes" not in features.columns:
+        raise ValueError(
+            "features has no 'bytes' column: pass a table with payload bytes,"
+            " or with_payload=False"
+        )
     timings: dict[str, float] = {}
     _t = time.time
-    # kd + hierarchy run on the byte-free projection: mapInPandas (the
-    # payload generator/decoder) is a column-pruning barrier, so any plan
-    # that "selects a few columns" downstream of it would still materialize
-    # every payload byte. Payload bytes flow through exactly one shuffle
-    # (the tile repartition) and are never persisted or scanned twice — at
-    # 100 TB payload bytes dominate, so this is the difference between 1x
-    # and depth-x payload generation + shuffle volume.
+    # count, kd and leaf-stats scans read this byte-free projection:
+    # mapInPandas (the payload generator/decoder) is a column-pruning
+    # barrier, so payload bytes are read by the encode branch alone and
+    # cross exactly one shuffle (the tile repartition)
     t0 = _t()
-    src = features if features is not None else features_df(spark, sf_dir, with_bytes=False)
-    slim_cols = ["image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"]
-    if payload_source == "column":
-        # bytes stay out of every branch except the encode one; no persist
-        # of the payload (the file source IS the cache)
-        base = src.select(*slim_cols)
-    else:
-        base = src.select(*slim_cols).persist()
-    n_rows = n_rows_hint if n_rows_hint is not None else base.count()
+    src = features if features is not None else features_df(spark, sf_dir)
+    slim = src.select(*SLIM_COLS)
+    n_rows = n_rows_hint if n_rows_hint is not None else slim.count()
     # 100x finish auto-switch: above this many (estimated) leaf tiles the
-    # driver-side finish (single-manifest collect / pyarrow metadata read)
-    # stops being "tiny" — lineage, tree roll-up, and the manifest then run
-    # distributed, with executor-sharded external tilesets. The estimate
-    # needs no job: leaves ~= n_rows / kd_tree_max by construction.
+    # driver-side finish (metadata collect + roll-up) stops being "tiny" —
+    # lineage, tree roll-up, and the manifest then run distributed, with
+    # executor-sharded external tilesets. The estimate needs no job:
+    # leaves ~= n_rows / kd_tree_max by construction.
     auto_shard_tiles = int(os.environ.get("SPARK_GRAFT_AUTO_SHARD_TILES", "2048"))
     est_leaves = max(1, int(n_rows) // max(kd_tree_max, 1))
     if manifest_shard_depth is None and est_leaves > auto_shard_tiles:
@@ -305,205 +284,121 @@ def run_tiler(
         # holds ~#leaves/2^depth nodes — both stay far below driver memory
         # out to 10^12 rows (2^31 leaves -> 2^16 shards of ~2^15 leaves)
         manifest_shard_depth = max(2, (est_leaves.bit_length() + 1) // 2)
-    # size encode tasks by their OUTPUT (~35k payload rows each): large
-    # per-task payload buffers degrade superlinearly (page-fault pressure),
-    # and AQE only sees the tiny columnar input. Round up to whole waves of
-    # the available slots to avoid a straggler tail.
+    # round encode tasks up to whole waves of the available slots to avoid
+    # a straggler tail
     par = spark.sparkContext.defaultParallelism
-    rows_per_task = int(os.environ.get("SPARK_GRAFT_ROWS_PER_TASK", "35000"))
-    waves = max(2, -(-(n_rows // rows_per_task + 1) // par))
-    n_parts = waves * par
+    n_parts = max(2, -(-(n_rows // ROWS_PER_TASK + 1) // par)) * par
     if exact:
         # parity path: kd runs on the slim projection (window sorts), the
-        # assignment joins back to the payload columns
-        slim = kd_assign(
-            base.select("image_id", "x", "y", "z"),
-            kd_tree_max=kd_tree_max,
-            exact=True,
+        # assignment joins back to the payload rows
+        tiled = kd_assign(
+            slim.select("image_id", "x", "y", "z"), kd_tree_max=kd_tree_max, exact=True
         ).localCheckpoint(eager=True)
-        assigned = (src if payload_source == "column" else base).join(
-            slim.select("image_id", "tile_id"), "image_id"
-        )
-        tree_src = slim
-    elif payload_source == "column":
-        # scale path over a payload table: build the split tree from a slim
-        # (x, y) sample scan, then assign BOTH branches map-side — the tree
-        # roll-up on a pruned scan, the encode branch on the full rows.
-        # Zero shuffles before the single tile repartition.
-        walk = kd_sample_walk(base.select("x", "y"), kd_tree_max, n_rows)
-        assigned = src.withColumn("tile_id", walk(F.col("x"), F.col("y")))
-        tree_src = base.select("x", "y", "z").withColumn(
-            "tile_id", walk(F.col("x"), F.col("y"))
-        )
+
+        def assign(df: DataFrame) -> DataFrame:
+            return df.join(tiled.select("image_id", "tile_id"), "image_id")
     else:
-        # scale path: tile assignment is a broadcast-tree map-side column —
-        # NO join, NO shuffle of anything yet
-        assigned = kd_assign(base, kd_tree_max=kd_tree_max, exact=False)
-        tree_src = assigned
+        # scale path: the split tree comes from a slim (x, y) sample scan and
+        # every row is assigned map-side — zero shuffles before the single
+        # tile repartition
+        walk = kd_sample_walk(slim.select("x", "y"), kd_tree_max, n_rows)
+
+        def assign(df: DataFrame) -> DataFrame:
+            return df.withColumn("tile_id", walk(F.col("x"), F.col("y")))
+
+        tiled = assign(slim.select("x", "y", "z"))
     timings["kd"] = _t() - t0
 
     tiles_dir = os.path.join(out_dir, "tiles")
     lineage_dir = os.path.join(out_dir, "lineage")
-
-    # In the scale path with payload, the tile encoder emits per-tile bbox
-    # stats, so the hierarchy rolls up from the written tiles (O(#tiles))
-    # and no second source scan exists. The exact/parity path (and the
-    # payload-less run) still derives the tree from the assignment rows.
-    tree = None
-    deferred_tree = (not exact) and with_payload
-    if not deferred_tree:
-        # the tree is tiny (~2x leaf count rows) and consumed three times
-        # (leaf count, root stats, manifest collect) — materialize it once
-        t0 = _t()
-        tree = tile_tree(tree_src.select("tile_id", "x", "y", "z")).localCheckpoint(
-            eager=True
-        )
-        timings["tree"] = _t() - t0
-
+    local = manifest_shard_depth is None
     if with_payload:
-        payload_cols = [
-            "tile_id", "image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"
-        ]
-        if payload_source == "column":
-            payload_cols.append("bytes")
-        todo = assigned.select(*payload_cols)
+        payload_cols = ["tile_id", *SLIM_COLS] + (["bytes"] if features is not None else [])
+        todo = assign(src).select(*payload_cols)
         if resume and os.path.exists(lineage_dir):
             done = spark.read.parquet(lineage_dir).where(
                 F.col("run_id") == run_id
-            ).select("cell_id").withColumnRenamed("cell_id", "tile_id")
+            ).select(F.col("cell_id").alias("tile_id"))
             todo = todo.join(F.broadcast(done), "tile_id", "left_anti")
         if fail_after_tiles is not None:
-            keep = [
-                r["tile_id"]
-                for r in sorted(
-                    todo.select("tile_id").distinct().collect(),
-                    key=lambda r: r["tile_id"],
-                )[:fail_after_tiles]
-            ]
-            todo = todo.where(F.col("tile_id").isin(keep))
+            keep = sorted(r["tile_id"] for r in todo.select("tile_id").distinct().collect())
+            todo = todo.where(F.col("tile_id").isin(keep[:fail_after_tiles]))
+        if features is None:
+            todo = attach_bytes(todo)
         t0 = _t()
         # LATE MATERIALIZATION (the reference's lazy per-tile geometry,
-        # geometry_node.py:70-75): ONE shuffle of the slim columns
-        # co-partitions+sorts rows by tile; payload bytes are synthesized
-        # inside the final partitioning (never cross a shuffle) and encoded
-        # by the streaming group iterator in the SAME stage. With a real
-        # upstream bytes column the identical plan applies — bytes would
-        # ride that one repartition.
+        # geometry_node.py:70-75): ONE shuffle co-partitions and sorts the
+        # rows, bytes included, by tile; the streaming encoder then atlases
+        # each tile in the same stage
         pre = todo.repartition(n_parts, "tile_id").sortWithinPartitions("tile_id")
         files_dir = None
         if tile_sink == "files":
             files_dir = os.path.join(out_dir, "tiles_files")
             os.makedirs(files_dir, exist_ok=True)
-        encoded = (
-            encode_tiles_stream(pre, files_dir)
-            if payload_source == "column"
-            else encode_tiles_from_slim(pre, files_dir)
-        )
         # atlas blobs are already entropy-coded (zlib) — parquet snappy on
         # top is pure JVM CPU for ~0 ratio; uncompressed halves the write
         # path's CPU demand (matters when executor JVM threads contend with
         # the Python workers for the same cores)
-        encoded.write.mode("append").option("compression", "uncompressed").parquet(
-            tiles_dir
-        )
+        encode_tiles_stream(pre, files_dir).write.mode("append").option(
+            "compression", "uncompressed"
+        ).parquet(tiles_dir)
         timings["encode_write"] = _t() - t0
+        # the leaf stats are the encoder's metadata columns (the heavy atlas
+        # column is never read); one read feeds lineage, tree and manifest
         t0 = _t()
-        # parquet column pruning: the heavy atlas column is never read. The
-        # session's tiny maxPartitionBytes (sized for the sandbox inputs)
-        # would split this metadata-only read into hundreds of tasks — widen
-        # it for the read, then restore.
-        mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 30))
-        # local finish: when the tree stays on the driver anyway (non-sharded
-        # manifest), ONE pruned collect of the O(#tiles) metadata feeds the
-        # lineage sink, the tree roll-up, AND the manifest — replacing four
-        # driver-blocking Spark jobs (stats checkpoint, lineage write, tree
-        # agg, manifest collect) with one. This is the pipeline's serial
-        # tail, the term that caps N->4N efficiency at fixed problem size.
-        local_finish = deferred_tree and manifest_shard_depth is None
-        meta_pdf = None
-        meta_cols = [
-            "tile_id", "n_features", "checksum",
-            "xmin", "xmax", "ymin", "ymax", "zmin", "zmax",
-        ]
-        try:
-            if local_finish:
-                # pyarrow read of the local/shared tiles dir: the metadata is
-                # O(#tiles) and pruned to 9 small columns — launching a Spark
-                # job for it costs more (scheduling + task dispatch) than the
-                # read itself, and that cost lands in the serial tail that
-                # caps N->4N scaling
-                import pyarrow.parquet as _pq
+        if local:
+            # pyarrow read of the tiles dir: the metadata is O(#tiles), and a
+            # Spark job for it costs more (scheduling + task dispatch) than
+            # the read itself, in the serial tail that caps N->4N scaling
+            import pyarrow.parquet as pq
 
-                meta_pdf = _pq.read_table(
-                    tiles_dir, columns=meta_cols
-                ).to_pandas()
-                _write_lineage_local(meta_pdf, lineage_dir, run_id)
-                timings["lineage"] = _t() - t0
-            else:
-                # ONE pruned read of the tile metadata feeds both the lineage
-                # sink and the (deferred) tree roll-up
-                tiles_meta = spark.read.parquet(tiles_dir).select(*meta_cols
+            meta_pdf = pq.read_table(tiles_dir, columns=META_COLS).to_pandas()
+            _write_lineage_local(meta_pdf, lineage_dir, run_id)
+            leaf_rows = meta_pdf.to_dict("records")
+        else:
+            # the session's tiny maxPartitionBytes (sized for the sandbox
+            # inputs) would split this metadata-only read into hundreds of
+            # tasks — widen it for the read, then restore
+            mpb = spark.conf.get("spark.sql.files.maxPartitionBytes")
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(1 << 30))
+            try:
+                leaf_stats = spark.read.parquet(tiles_dir).select(*META_COLS
                 ).localCheckpoint(eager=True)
-                lineage = tiles_meta.select(
-                    F.lit(run_id).alias("run_id"),
-                    F.col("tile_id").alias("cell_id"),
-                    F.col("n_features").alias("row_count"),
-                    "checksum",
-                    F.current_timestamp().alias("completed_at"),
-                )
-                lineage.write.mode("overwrite").parquet(lineage_dir)
-                timings["lineage"] = _t() - t0
-                if deferred_tree:
-                    t0 = _t()
-                    tree = tile_tree_from_stats(tiles_meta).localCheckpoint(eager=True)
-                    timings["tree"] = _t() - t0
-        finally:
-            spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            finally:
+                spark.conf.set("spark.sql.files.maxPartitionBytes", mpb)
+            leaf_stats.select(
+                F.lit(run_id).alias("run_id"),
+                F.col("tile_id").alias("cell_id"),
+                F.col("n_features").alias("row_count"),
+                "checksum",
+                F.current_timestamp().alias("completed_at"),
+            ).write.mode("overwrite").parquet(lineage_dir)
+        timings["lineage"] = _t() - t0
+    else:
+        leaf_stats = tile_stats(tiled)
+        if local:
+            leaf_rows = [r.asDict() for r in leaf_stats.collect()]
 
     t0 = _t()
     os.makedirs(out_dir, exist_ok=True)
-    if with_payload and meta_pdf is not None:
-        from ..operators.hierarchy import manifest_from_rows, rollup_rows_local
-
-        rows = rollup_rows_local(meta_pdf.to_dict("records"))
-        m = manifest_from_rows(rows)
+    if local:
+        rows = rollup_rows_local(leaf_rows)
         with open(os.path.join(out_dir, "tileset.json"), "w") as fh:
-            json.dump(m, fh)
+            json.dump(manifest_from_rows(rows), fh)
         n_leaves = sum(1 for v in rows.values() if v["is_leaf"])
         n_features = rows[""]["n_features"] if "" in rows else 0
-    elif manifest_shard_depth is not None:
+        finish = "local"
+    else:
         # 100x path: executors write per-prefix subtree tilesets, the driver
-        # holds only the top levels + one summary row per shard
-        from ..operators.hierarchy import write_manifest_sharded
-
-        m = write_manifest_sharded(tree, out_dir, manifest_shard_depth)
+        # holds only the top levels + one summary row per shard. The tree is
+        # read twice (shards, top levels): materialize it once.
+        tree = tile_tree_from_stats(leaf_stats).localCheckpoint(eager=True)
+        m = hierarchy.write_manifest_sharded(tree, out_dir, manifest_shard_depth)
         # counts come back on the shard summaries — no extra job on the tree
         n_leaves = m["_n_leaves"]
         n_features = m["root"].get("n_features", 0) if m.get("root") else 0
-    else:
-        # single collect: the manifest dict also answers the leaf/feature
-        # counts (three separate actions on the tiny tree cost a job each)
-        m = manifest(tree)
-        with open(os.path.join(out_dir, "tileset.json"), "w") as fh:
-            json.dump(m, fh)
-
-        def _leaves(node) -> int:
-            if not node.get("children"):
-                return 1
-            return sum(_leaves(c) for c in node["children"])
-
-        n_leaves = _leaves(m["root"]) if m.get("root") else 0
-        n_features = m["root"].get("n_features", 0) if m.get("root") else 0
-    timings["manifest"] = _t() - t0
-    if payload_source != "column":
-        base.unpersist()
-    if with_payload and meta_pdf is not None:
-        finish = "local"
-    elif manifest_shard_depth is not None:
         finish = f"sharded:d{manifest_shard_depth}"
-    else:
-        finish = "driver-manifest"
+    timings["manifest"] = _t() - t0
     return {
         "n_features": int(n_features),
         "n_tiles": int(n_leaves),

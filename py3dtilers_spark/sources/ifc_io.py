@@ -428,12 +428,16 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
         # StartParam / EndParam (4th/5th args): a NUMERIC value means a
         # TRIMMED sweep, which this subset does not evaluate — such solids
         # are dropped below (consistent with the subset policy of omitting
-        # unsupported forms) instead of silently emitting the full tube
-        F.trim(F.element_at(F.split("args", ","), 4)).alias("_p_start"),
-        F.trim(F.element_at(F.split("args", ","), 5)).alias("_p_end"),
+        # unsupported forms) instead of silently emitting the full tube.
+        # try_element_at: a truncated line (fewer than the 5 arguments
+        # IfcSweptDiskSolid requires) yields null instead of failing the
+        # whole scan under ANSI mode, and is dropped below.
+        F.trim(F.try_element_at(F.split("args", ","), F.lit(4))).alias("_p_start"),
+        F.trim(F.try_element_at(F.split("args", ","), F.lit(5))).alias("_p_end"),
     ).where(
-        (F.col("_p_start").isNull() | ~F.col("_p_start").rlike(r"^[0-9.+\-]"))
-        & (F.col("_p_end").isNull() | ~F.col("_p_end").rlike(r"^[0-9.+\-]"))
+        F.col("_p_end").isNotNull()
+        & ~F.col("_p_start").rlike(r"^[0-9.+\-]")
+        & ~F.col("_p_end").rlike(r"^[0-9.+\-]")
     ).drop("_p_start", "_p_end")
     polys = entities.where(F.col("ifc_class") == "IFCPOLYLINE").select(
         F.col("entity_id").alias("curve_id"),

@@ -893,3 +893,18 @@ def test_ifc_swept_disk_trimmed_is_dropped(spark, tmp_path):
     p2 = tmp_path / "sds_full.ifc"
     p2.write_text(IFC_SDS_TEXT)
     assert ifc_sds_meshes(ifc_entities(spark, str(p2))).count() == 1
+
+
+def test_ifc_swept_disk_truncated_line_is_dropped(spark, tmp_path):
+    """A truncated IfcSweptDiskSolid line (fewer than its 5 arguments) must
+    not fail the scan under ANSI mode: that entity is dropped and the valid
+    solid beside it still evaluates."""
+    from py3dtilers_spark.sources.ifc_io import ifc_entities, ifc_sds_meshes
+
+    p = tmp_path / "sds_truncated.ifc"
+    p.write_text(IFC_SDS_TEXT.replace(
+        "#59= IFCSWEPTDISKSOLID(#56,0.2,0.1,$,$);",
+        "#58= IFCSWEPTDISKSOLID(#56,0.2);\n#59= IFCSWEPTDISKSOLID(#56,0.2,0.1,$,$);",
+    ))
+    rows = ifc_sds_meshes(ifc_entities(spark, str(p))).collect()
+    assert [r["solid_id"] for r in rows] == [59]

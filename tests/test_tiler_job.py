@@ -5,6 +5,7 @@ import json
 import os
 
 import numpy as np
+import pytest
 
 from py3dtilers_spark.functions.imaging import decode, psnr, synth_pixels
 from py3dtilers_spark.plans.tiler_job import run_tiler
@@ -96,6 +97,43 @@ def test_manifest_written(spark, sf_smoke, tmp_path):
     with open(os.path.join(out, "tileset.json")) as fh:
         m = json.load(fh)
     assert m["root"]["geometricError"] == 500.0
+
+
+def test_exact_payload_run_finishes_locally(spark, sf_smoke, tmp_path):
+    """The parity path rolls its tree up from the encoder's per-tile stats
+    on the driver, and its tileset.json equals the distributed tree built
+    straight from the exact kd assignment rows."""
+    from py3dtilers_spark.data import features_df
+    from py3dtilers_spark.operators.hierarchy import manifest, tile_tree
+    from py3dtilers_spark.operators.kd_tree import kd_assign
+
+    out = str(tmp_path / "ex")
+    stats = run_tiler(spark, sf_smoke, out, kd_tree_max=300, exact=True)
+    assert stats["finish"] == "local"
+    with open(os.path.join(out, "tileset.json")) as fh:
+        local = json.load(fh)
+    rows = kd_assign(
+        features_df(spark, sf_smoke).select("image_id", "x", "y", "z"),
+        kd_tree_max=300, exact=True,
+    )
+    assert local == manifest(tile_tree(rows))
+
+
+@pytest.mark.parametrize("case", ["bytes_less_features", "synth_source"])
+def test_removed_payload_modes_raise(spark, sf_smoke, tmp_path, case):
+    """Payload bytes only come from the input table: a features frame
+    without a bytes column, or the removed 'synth' source, fail loudly
+    before any job runs."""
+    from py3dtilers_spark.data import features_df
+
+    if case == "bytes_less_features":
+        kw = {"features": features_df(spark, sf_smoke), "with_payload": True}
+        match = "no 'bytes' column"
+    else:
+        kw = {"payload_source": "synth"}
+        match = "'synth' payload source was removed"
+    with pytest.raises(ValueError, match=match):
+        run_tiler(spark, "" if "features" in kw else sf_smoke, str(tmp_path / "x"), **kw)
 
 
 def test_pipeline_with_sharded_manifest(spark, sf_smoke, tmp_path):

@@ -86,7 +86,6 @@ def main() -> None:
         with_payload=True,
         run_id=f"scale_c{cores}",
         features=feats,
-        payload_source="column",
         n_rows_hint=n_rows,
         tile_sink="files",
     )

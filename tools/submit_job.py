@@ -26,7 +26,11 @@ import os
 
 def main() -> None:
     ap = argparse.ArgumentParser()
-    ap.add_argument("--input", required=True, help="sf dir containing lineitem.parquet, or a features parquet dir")
+    ap.add_argument(
+        "--input", required=True,
+        help="sf dir containing lineitem.parquet, or a features parquet dir"
+        " (with a bytes payload column unless --no-payload)",
+    )
     ap.add_argument("--out", required=True)
     ap.add_argument("--kd-max", type=int, default=300)
     ap.add_argument("--resume", action="store_true")
