@@ -186,9 +186,17 @@ def _undelta(
     return np.cumsum(flat, axis=axis, dtype=np.uint8).reshape(h, w, 3)
 
 
+_MAX_SIDE = 0xFFFF  # the header's "<HH" width and height
+
+
 def encode(img: np.ndarray, fmt: str) -> bytes:
-    """Encode an (h, w, 3) uint8 array. fmt: 'png' (lossless) or 'jpg' (lossy)."""
+    """Encode an (h, w, 3) uint8 array. fmt: 'png' (lossless) or 'jpg' (lossy).
+    Width and height are stored as uint16: a larger image raises ValueError."""
     h, w = img.shape[0], img.shape[1]
+    if w > _MAX_SIDE or h > _MAX_SIDE:
+        raise ValueError(
+            f"image of {w}x{h} px exceeds the codec's {_MAX_SIDE} px limit per side"
+        )
     header = struct.pack("<HH", w, h)
     if fmt == "png":
         return MAGIC_RAWD + header + _compress(_delta_rows(img))

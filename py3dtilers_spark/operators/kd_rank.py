@@ -64,6 +64,12 @@ def kd_assign_rank(
     exchange-reuse hazard fix); the derived split frame is a broadcast-join
     map pass over it and is NOT checkpointed again (the round-5 second
     per-level checkpoint — VERDICT round-5 "What's wrong" #3).
+
+    ``n_rows``, when given, must be the exact row count of ``df``: it
+    replaces the initial count job, and the driver derives every cell size
+    from it. A cell that reaches the local finisher with more than
+    ``local_cap`` rows (only possible with a too-small hint) raises a
+    ``ValueError`` instead of being finished in one task.
     """
     local_cap = max(local_cap, 2 * kd_tree_max + 1)
     parts = int(
@@ -122,6 +128,12 @@ def kd_assign_rank(
 
     def finish_cell(pdf):
         path = pdf["tile_id"].iloc[0]
+        if len(pdf) > local_cap:
+            raise ValueError(
+                f"kd cell {path!r} reached the local finisher with {len(pdf)} "
+                f"rows > local_cap={local_cap}; n_rows={n_rows} must be the "
+                "exact row count of the input"
+            )
         out = pdf.copy()
         out["tile_id"] = kd_finish_numpy(
             pdf[id_col].to_numpy(),

@@ -241,20 +241,27 @@ def kd_sample_walk(
 
     @F.pandas_udf(StringType())
     def walk(x: pd.Series, y: pd.Series) -> pd.Series:
-        t, la, ra, da, pth = bc.value
-        xs = x.to_numpy()
-        ys = y.to_numpy()
-        cur = np.zeros(len(xs), dtype=np.int64)
-        live = la[cur] >= 0
-        while live.any():
-            node = cur[live]
-            vals = np.where(da[node] % 2 == 0, xs[live], ys[live])
-            go_left = vals < t[node]
-            cur[live] = np.where(go_left, la[node], ra[node])
-            live = la[cur] >= 0
-        return pd.Series(pth[cur])
+        return kd_walk(x, y, bc.value)
 
     return walk
+
+
+def kd_walk(x: pd.Series, y: pd.Series, tree: tuple) -> pd.Series:
+    """Vectorized walk of the broadcast split tree built by
+    ``kd_sample_walk``: the leaf path of every (x, y). Module-level so the
+    UDF pickles it by reference and the worker imports the package."""
+    t, la, ra, da, pth = tree
+    xs = x.to_numpy()
+    ys = y.to_numpy()
+    cur = np.zeros(len(xs), dtype=np.int64)
+    live = la[cur] >= 0
+    while live.any():
+        node = cur[live]
+        vals = np.where(da[node] % 2 == 0, xs[live], ys[live])
+        go_left = vals < t[node]
+        cur[live] = np.where(go_left, la[node], ra[node])
+        live = la[cur] >= 0
+    return pd.Series(pth[cur])
 
 
 def kd_leaf_index(tiles: DataFrame) -> DataFrame:

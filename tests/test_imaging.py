@@ -1,6 +1,7 @@
 """Codec + payload plumbing: PSNR >= 40 dB lossy / exact lossless round trip
 (BASELINE.json input_hint invariant), Arrow-batched bytes attachment."""
 import numpy as np
+import pytest
 
 from py3dtilers_spark.data import features_df
 from py3dtilers_spark.functions.imaging import (
@@ -23,6 +24,17 @@ def test_lossy_psnr_gate():
         out = decode(encode(img, "jpg"))
         assert psnr(img, out) >= 40.0
         assert np.abs(out.astype(int) - img.astype(int)).max() <= 3
+
+
+@pytest.mark.parametrize("fmt", ["png", "jpg"])
+@pytest.mark.parametrize("shape", [(1, 65536, 3), (65536, 1, 3)])
+def test_encode_rejects_side_over_uint16(shape, fmt):
+    # an atlas taller than the "<HH" header holds is a named error, not a
+    # struct.error deep inside the encode kernel
+    img = np.zeros(shape, dtype=np.uint8)
+    size = f"{shape[1]}x{shape[0]} px"
+    with pytest.raises(ValueError, match=f"{size} .*65535 px limit"):
+        encode(img, fmt)
 
 
 def test_shelf_pack_no_overlap():

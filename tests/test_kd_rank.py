@@ -4,6 +4,7 @@ window-only twin (`kd_tree._kd_exact_window`) and the pure-Python
 reference oracle."""
 import numpy as np
 import pytest
+from pyspark.errors import PythonException
 from pyspark.sql import functions as F
 
 from py3dtilers_spark.operators.kd_rank import kd_assign_rank
@@ -63,3 +64,11 @@ def test_rank_small_input_single_local_finish(spark):
         for r in kd_assign_rank(df, 10).collect()
     }
     assert got == kd_oracle(pts, 10)
+
+
+def test_rank_too_small_n_rows_fails_loudly(spark):
+    # the hint says 500 rows, so no rank level runs and one 3000-row cell
+    # reaches the local finisher past local_cap: a named error, not an OOM
+    df = spark.createDataFrame(_random_points(3000, seed=3), ["image_id", "x", "y"])
+    with pytest.raises(PythonException, match="n_rows=500"):
+        kd_assign_rank(df, 100, local_cap=1000, n_rows=500).collect()
