@@ -63,11 +63,6 @@ def morton_key(x: Column, y: Column, cell_size: float, x0: float = X0, y0: float
     return _morton_udf(gx, gy)
 
 
-def morton_parent(key: Column, levels: int = 1) -> Column:
-    """Parent Z-order cell: drop 2 bits per level (prefix property)."""
-    return F.shiftright(key, 2 * levels)
-
-
 def wkb_encode_point(x: float, y: float) -> bytes:
     """Little-endian WKB Point (G8 fixture side)."""
     import struct

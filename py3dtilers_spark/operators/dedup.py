@@ -53,13 +53,6 @@ _DUCK_SHINGLES = (
 )
 
 
-def _minhash_aggs_sql() -> list[str]:
-    return [
-        f"min((shid * {a} + {b}) % {_P}) AS mh{i}"
-        for i, (a, b) in enumerate(_MINHASH_AB)
-    ]
-
-
 def _band_key_sql(band: int) -> str:
     lo = band * ROWS_PER_BAND
     cols = ", ".join(f"CAST(mh{j} AS STRING)" for j in range(lo, lo + ROWS_PER_BAND))

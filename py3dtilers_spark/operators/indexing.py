@@ -25,14 +25,11 @@ def dense_index(
     order_cols: list[str],
     idx_col: str,
     base: int = 0,
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Append `idx_col`: the dense rank of each row under lexicographic
     `order_cols` order, starting at `base`. Rows must be unique on
     order_cols (dedupe first — this indexes, it does not group)."""
-    parts = num_partitions or df.sparkSession.conf.get(
-        "spark.sql.shuffle.partitions", "32"
-    )
+    parts = df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
     ranged = df.repartitionByRange(int(parts), *order_cols)
     w = Window.partitionBy("_pid").orderBy(*order_cols)
     local = (

@@ -1,36 +1,30 @@
-"""Range-partitioned exact-rank kd splits (the exact kd path since round 5;
-``kd_tree.kd_assign(exact=True)`` delegates here).
+"""Exact kd ``tile_id`` assignment: distributed exact-median levels, then a
+local numpy finisher per cell.
 
-Same semantics as the round-4 window-only path
-(``kd_tree._kd_exact_window``, retained as the parity twin) — the reference 2-D
-kd-tree (/root/reference/py3dtilers/Common/kd_tree.py:4-42) with the
-documented id tie-break — but the shallow split levels are computed with
-the ``indexing.dense_index`` range-partition + prefix-sum shape instead of
-``Window.partitionBy("tile_id")``.
+Semantics are the reference 2-D kd-tree
+(py3dtilers/Common/kd_tree.py:4-42 of the reference) with the id tie-break
+documented in ``kd_tree``; ``kd_tree.kd_oracle`` is the pure-Python
+statement of the same rule and tests/test_kd_rank.py pins parity with it.
 
-Why: at depth 0 the window path partitions by a CONSTANT tile_id (""), so
-Catalyst folds the key away and Spark executes a single-task WindowExec
-over the whole dataset — fine at sf0.1, impossible at 10^12 rows (this is
-the `No Partition Defined` warning pinned in BENCH/BASELINE.md round-5
-notes). Here every level, including the root, ranks rows with:
+Distributed levels run only while some live cell holds more than
+``LOCAL_CAP`` rows. Each level ranks every row inside its cell by
+(axis value, image_id) with one of two steps:
 
-1. ``repartitionByRange(P, tile_id, axis, id)`` — non-overlapping sorted
-   ranges, every partition a normal shuffle-partition size;
-2. a per-(partition, cell) local ``row_number`` (small parallel windows);
-3. an exclusive prefix sum of per-(partition, cell) counts within each
-   cell — a P x C row aggregate (P = shuffle partitions, C = live cells),
-   broadcast back. Global in-cell rank = offset + local rank.
+- ``_rank_step`` while at most ``CELL_SWITCH`` cells are live:
+  ``repartitionByRange(P, tile_id, axis, id)`` gives non-overlapping sorted
+  ranges, a per-(partition, cell) ``row_number`` ranks locally, and an
+  exclusive prefix sum of the per-(partition, cell) counts (a P x C row
+  aggregate, broadcast back) turns local ranks into in-cell ranks. A
+  ``Window.partitionBy("tile_id")`` at the root would partition by a
+  constant key and run the whole dataset through one task; this step never
+  does.
+- ``_window_step`` once cells are numerous: a per-cell window, which
+  hash-partitions well when there are many small cells.
 
-The rank step costs one extra tiny aggregation per level versus the window
-step, and its counts table grows with C — so it is only used while
-C <= ``cell_switch``; deeper levels (many small cells) hash-partition
-naturally and keep the original window step. The crossover is a constant:
-the rank path covers exactly the levels where per-cell windows cannot
-parallelize, the window path covers the levels where they trivially do.
-
-Wired into ``kd_assign``/the tiler in round 5 (the round-4 fingerprint
-freeze kept it out of chain v22's job path); parity with the window-only
-path AND the Python oracle is pinned by tests/test_kd_rank.py.
+The split is an exact median, so child sizes are floor(n/2) / ceil(n/2)
+and the driver tracks every live cell's size from one row count: no
+per-level count job. Cells that fit ``LOCAL_CAP`` are finished in one
+``applyInPandas`` task each by ``kd_finish_numpy``.
 """
 from __future__ import annotations
 
@@ -38,44 +32,39 @@ import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+# largest cell finished in one task: the numpy finisher needs ~40 B/row and
+# ~3 us/row, so a 1M-row cell is ~40 MB and a few seconds of task CPU
+LOCAL_CAP = 1_000_000
+# most live cells a level ranks with the range step; above it the per-cell
+# window step is used
+CELL_SWITCH = 256
 
-def kd_assign_rank(
+
+def kd_assign(
     df: DataFrame,
     kd_tree_max: int = 500,
-    id_col: str = "image_id",
-    x_col: str = "x",
-    y_col: str = "y",
-    local_cap: int = 1_000_000,
-    cell_switch: int = 256,
-    num_partitions: int | None = None,
+    exact: bool = True,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """Exact kd ``tile_id`` assignment, root splits fully distributed.
-
-    Identical output to ``kd_tree.kd_assign(df, kd_tree_max, exact=True)``.
-
-    Round-6 loop shape (guide section 2.4 — remove passes outright): the
-    split is an EXACT median (rank <= floor(n/2)), so child cell sizes are
-    floor(n/2) / ceil(n/2) deterministically and the whole level-by-level
-    control flow (max live cell, live cell count, leaf rule) is tracked on
-    the driver from ONE initial count — the former per-level
-    groupBy("tile_id").count() full-pass job is gone. Per level exactly one
-    materialization remains: the rank step's post-exchange frame (the
-    exchange-reuse hazard fix); the derived split frame is a broadcast-join
-    map pass over it and is NOT checkpointed again (the round-5 second
-    per-level checkpoint — VERDICT round-5 "What's wrong" #3).
+    """Add the kd-leaf path bitstring ``tile_id`` ('0' = left) to every row
+    of ``df``, which must have the columns ``image_id``, ``x`` and ``y``.
 
     ``n_rows``, when given, must be the exact row count of ``df``: it
-    replaces the initial count job, and the driver derives every cell size
-    from it. A cell that reaches the local finisher with more than
-    ``local_cap`` rows (only possible with a too-small hint) raises a
-    ``ValueError`` instead of being finished in one task.
+    replaces the count job, and the driver derives every cell size from it.
+    A cell that reaches the local finisher with more than ``LOCAL_CAP`` rows
+    (only possible with a too-small ``n_rows``) raises a ``ValueError``
+    instead of being finished in one task.
+
+    ``exact=False`` raises a ``ValueError``: the sample-walk kd is
+    ``kd_tree.kd_sample_walk``.
     """
-    local_cap = max(local_cap, 2 * kd_tree_max + 1)
-    parts = int(
-        num_partitions
-        or df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    if not exact:
+        raise ValueError(
+            "kd_assign is the exact kd only; use kd_tree.kd_sample_walk for"
+            " the sample-walk assignment"
+        )
+    local_cap = max(LOCAL_CAP, 2 * kd_tree_max + 1)
+    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     cur = df.withColumn("tile_id", F.lit(""))
     out_schema = cur.schema
     cols = [f.name for f in out_schema.fields]
@@ -86,13 +75,12 @@ def kd_assign_rank(
     # driver-side exact cell sizes: path -> row count of each live (non-leaf) cell
     live = {"": int(n_rows)}
     while live and max(live.values()) > local_cap:
-        n_cells = len(live)
-        axis = x_col if depth % 2 == 0 else y_col
-        if n_cells <= cell_switch:
-            ranked = _rank_step(cur, axis, id_col, parts)
+        axis = "x" if depth % 2 == 0 else "y"
+        if len(live) <= CELL_SWITCH:
+            ranked = _rank_step(cur, axis, parts)
             checkpoint_stepped = False
         else:
-            ranked = _window_step(cur, axis, id_col)
+            ranked = _window_step(cur, axis)
             # the window step has no internal materialization: checkpoint
             # its output to truncate the iterative lineage
             checkpoint_stepped = True
@@ -136,9 +124,9 @@ def kd_assign_rank(
             )
         out = pdf.copy()
         out["tile_id"] = kd_finish_numpy(
-            pdf[id_col].to_numpy(),
-            pdf[x_col].to_numpy(),
-            pdf[y_col].to_numpy(),
+            pdf["image_id"].to_numpy(),
+            pdf["x"].to_numpy(),
+            pdf["y"].to_numpy(),
             kd_tree_max,
             path,
         )
@@ -186,18 +174,18 @@ def kd_finish_numpy(
     return out
 
 
-def _rank_step(cur: DataFrame, axis: str, id_col: str, parts: int) -> DataFrame:
+def _rank_step(cur: DataFrame, axis: str, parts: int) -> DataFrame:
     """In-cell exact rank ``_rn`` and cell size ``_n`` without any per-cell
     window: range exchange + local rank + per-cell prefix-sum of partition
     counts (the ``indexing.dense_index`` shape, per live cell)."""
-    ranged = cur.repartitionByRange(parts, "tile_id", F.col(axis), id_col)
+    ranged = cur.repartitionByRange(parts, "tile_id", F.col(axis), "image_id")
     local = (
         ranged.withColumn("_pid", F.spark_partition_id())
         .withColumn(
             "_lrn",
             F.row_number().over(
                 Window.partitionBy("_pid", "tile_id")
-                .orderBy(F.col(axis).asc(), F.col(id_col).asc())
+                .orderBy(F.col(axis).asc(), F.col("image_id").asc())
             ),
         )
     )
@@ -242,11 +230,11 @@ def _rank_step(cur: DataFrame, axis: str, id_col: str, parts: int) -> DataFrame:
     )
 
 
-def _window_step(cur: DataFrame, axis: str, id_col: str) -> DataFrame:
-    """The frozen path's per-cell window step (kd_tree._kd_exact), used once
-    cells are numerous enough to hash-partition well."""
+def _window_step(cur: DataFrame, axis: str) -> DataFrame:
+    """In-cell rank ``_rn`` and cell size ``_n`` from per-cell windows, used
+    once cells are numerous enough to hash-partition well."""
     w_order = Window.partitionBy("tile_id").orderBy(
-        F.col(axis).asc(), F.col(id_col).asc()
+        F.col(axis).asc(), F.col("image_id").asc()
     )
     w_cell = Window.partitionBy("tile_id")
     return cur.withColumn("_rn", F.row_number().over(w_order)).withColumn(

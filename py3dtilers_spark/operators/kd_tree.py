@@ -1,4 +1,4 @@
-"""Distributed kd-tree tile partitioning.
+"""kd-tree tile partitioning.
 
 Semantics follow the reference 2-D kd-tree
 (/root/reference/py3dtilers/Common/kd_tree.py:4-42):
@@ -18,148 +18,24 @@ Tile id = the left/right path bitstring ('0' = left); the reference's DFS
 tile numbering (tileset_creation.py:23,130) equals the lexicographic rank of
 the path, exposed via ``kd_leaf_index``.
 
-Scale notes: exact mode costs one hash-shuffle + in-partition sort per level
-(log2(N / kd_tree_max) levels; ~11 at 10^12 rows with max=500 it is 31 levels
-— each a single window over cells that halve in size every level, so total
-shuffled bytes per level stay constant ~= dataset size; AQE coalesces the
-tail). Scale mode (exact=False, ``kd_sample_walk``) builds the whole split
-tree on the driver from a bounded centroid sample and broadcasts it; every
-row is then assigned by a vectorized tree walk in a pandas UDF: no shuffle,
-no sort, and leaf sizes within the sampling error.
+Two assignments:
+
+- ``kd_assign`` (defined in ``kd_rank``, re-exported here): the exact tree.
+  Distributed exact-median levels run until every cell fits one task, then
+  each cell is finished locally; its output equals ``kd_oracle``.
+- ``kd_sample_walk``: builds the whole split tree on the driver from a
+  bounded centroid sample and broadcasts it; every row is then assigned by
+  a vectorized tree walk in a pandas UDF: no shuffle, no sort, and leaf
+  sizes within the sampling error.
 """
 from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def kd_assign(
-    df: DataFrame,
-    kd_tree_max: int = 500,
-    exact: bool = True,
-    id_col: str = "image_id",
-    x_col: str = "x",
-    y_col: str = "y",
-    local_cap: int = 1_000_000,
-) -> DataFrame:
-    """Assign each row a kd-leaf ``tile_id`` path bitstring.
-
-    Exact mode is HYBRID: distributed exact-median splits run only until
-    every live cell fits ``local_cap`` rows (executor-memory sized); each
-    such cell is then finished in a single applyInPandas task running the
-    identical recursion locally. Total distributed levels =
-    log2(N / local_cap) (e.g. ~20 for 10^12 rows at cap 1M) instead of
-    log2(N / kd_tree_max); the local phase is embarrassingly parallel.
-
-    local_cap default (round 6): 1M rows. Every distributed level is a
-    full-dataset range shuffle + materialization, so the hybrid switch
-    should come as soon as a cell comfortably fits one task: the finisher
-    is now the vectorized ``kd_rank.kd_finish_numpy`` (~3 us/row, n log n,
-    ~40 B/row working set — a 1M-row cell is ~40 MB of pandas and ~4 s of
-    task CPU). The former 200k cap was sized to the old pure-Python
-    finisher (~7.4 us/row measured at 150k rows).
-
-    Since round 5 the shallow split levels use the range-partitioned
-    exact-rank step (operators/kd_rank.py): at depth 0-1 a
-    ``Window.partitionBy("tile_id")`` key is (nearly) constant, Catalyst
-    constant-folds it away and the whole dataset flows through ONE
-    WindowExec task — measured 2.6x slower at 5M rows and unbounded in N
-    (BENCH/BASELINE.md round-5 notes). The rank step keeps every level a
-    normal shuffle; deep levels (many small cells) keep the window step,
-    which hash-partitions well there. Parity of both paths with the
-    Python oracle is pinned by tests/test_kd_rank.py.
-    """
-    if exact:
-        from .kd_rank import kd_assign_rank
-
-        return kd_assign_rank(
-            df, kd_tree_max, id_col=id_col, x_col=x_col, y_col=y_col,
-            local_cap=local_cap,
-        )
-    return _kd_approx(df, kd_tree_max, x_col, y_col)
-
-
-def _kd_exact_window(df, kd_tree_max, id_col, x_col, y_col, local_cap):
-    """Round-4 window-only exact path, retained as the independent parity
-    twin for tests/test_kd_rank.py (NOT in the job path: its depth-0/1
-    window partitions by a constant key -> single-task WindowExec)."""
-    local_cap = max(local_cap, 2 * kd_tree_max + 1)
-    cur = df.withColumn("tile_id", F.lit(""))
-    out_schema = cur.schema
-    cols = [f.name for f in out_schema.fields]
-    done_parts: list[DataFrame] = []
-    depth = 0
-    while True:
-        mx_row = (
-            cur.groupBy("tile_id").agg(F.count(F.lit(1)).alias("_n"))
-            .agg(F.max("_n").alias("mx")).collect()
-        )
-        mx = mx_row[0]["mx"] if mx_row else None
-        if mx is None or mx <= local_cap:
-            break
-        axis = x_col if depth % 2 == 0 else y_col
-        w_order = Window.partitionBy("tile_id").orderBy(
-            F.col(axis).asc(), F.col(id_col).asc()
-        )
-        w_cell = Window.partitionBy("tile_id")
-        stepped = (
-            cur.withColumn("_rn", F.row_number().over(w_order))
-            .withColumn("_n", F.count(F.lit(1)).over(w_cell))
-            .withColumn("_m", F.floor(F.col("_n") / 2))
-            .withColumn(
-                "tile_id",
-                F.concat(
-                    F.col("tile_id"),
-                    F.when(F.col("_rn") <= F.col("_m"), F.lit("0")).otherwise(F.lit("1")),
-                ),
-            )
-            # right half size ceil(n/2) >= left; leaf iff it fits
-            .withColumn("_leaf", (F.col("_n") - F.col("_m")) <= F.lit(kd_tree_max))
-            .drop("_rn", "_n", "_m")
-        )
-        stepped = stepped.localCheckpoint(eager=True)  # truncate iterative lineage
-        done_parts.append(stepped.where("_leaf").drop("_leaf"))
-        cur = stepped.where("NOT _leaf").drop("_leaf")
-        depth += 1
-
-    def finish_cell(pdf):
-        path = pdf["tile_id"].iloc[0]
-        pts = list(zip(pdf[id_col], pdf[x_col], pdf[y_col]))
-        assign = kd_oracle(pts, kd_tree_max, path=path)
-        out = pdf.copy()
-        out["tile_id"] = out[id_col].map(assign)
-        return out[cols]
-
-    finished = cur.groupBy("tile_id").applyInPandas(finish_cell, schema=out_schema)
-    out = finished
-    for p in done_parts:
-        out = out.unionByName(p)
-    return out
-
-
-def _kd_approx(df, kd_tree_max, x_col, y_col, sample_cap: int = 100_000):
-    """Scale path: sample-based split tree + one map-side assignment pass.
-
-    Like Spark's RangePartitioner: collect a bounded sample of centroids,
-    build the full kd split tree on the driver (medians of the sample,
-    leaf-size estimates scaled by the sampling fraction), broadcast the
-    thresholds, and assign every row with a vectorized tree walk inside an
-    Arrow-batched pandas UDF. ZERO shuffles for assignment — the only cost
-    is one scan — versus one shuffle per level for the exact path. Leaf
-    sizes are approximate within sampling error (~±3% at the default cap).
-    """
-    # three actions consume df (count, sample, assignment scan) — cache it
-    df = df.persist()
-    n_total = df.count()
-    if n_total == 0:
-        return df.withColumn("tile_id", F.lit(""))
-    walk = kd_sample_walk(
-        df.select(x_col, y_col), kd_tree_max, n_total,
-        x_col=x_col, y_col=y_col, sample_cap=sample_cap,
-    )
-    return df.withColumn("tile_id", walk(F.col(x_col), F.col(y_col)))
+from .kd_rank import kd_assign  # noqa: F401
 
 
 def kd_sample_walk(
@@ -281,8 +157,8 @@ def kd_leaf_index(tiles: DataFrame) -> DataFrame:
 def kd_oracle(points, kd_tree_max, path=""):
     """Pure-Python oracle with the engine's exact semantics (mirrors the
     reference algorithm at kd_tree.py:4-42 with the documented id tie-break).
-    Doubles as the local finisher of the hybrid kd split (depth resumes from
-    len(path), preserving axis alternation).
+    A non-empty ``path`` splits one cell of a larger tree (depth resumes
+    from len(path), preserving axis alternation).
 
     points: iterable of (id, x, y). Returns {id: tile_id_path}.
     """

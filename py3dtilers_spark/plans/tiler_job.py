@@ -48,6 +48,10 @@ from ..operators.hierarchy import manifest, tile_tree  # noqa: F401
 # per-task payload buffers degrade superlinearly (page-fault pressure), and
 # AQE only sees the tiny columnar input
 ROWS_PER_TASK = 35_000
+# above this many estimated leaf tiles the driver-side finish (metadata
+# collect + roll-up) stops being "tiny": lineage, tree roll-up and the
+# manifest then run distributed, with executor-sharded external tilesets
+SHARD_TILES = 2048
 SLIM_COLS = ["image_id", "x", "y", "z", "w", "h", "fmt", "caption", "phash"]
 META_COLS = [
     "tile_id", "n_features", "checksum", "xmin", "xmax", "ymin", "ymax", "zmin", "zmax",
@@ -228,7 +232,6 @@ def run_tiler(
     features: "DataFrame | None" = None,
     payload_source: str = "column",
     n_rows_hint: int | None = None,
-    manifest_shard_depth: int | None = None,
     tile_sink: str = "parquet",
 ) -> dict:
     """Execute the pipeline; returns summary metrics (incl. per-phase secs).
@@ -238,6 +241,8 @@ def run_tiler(
     bytes attached by ``attach_bytes`` on the encode branch only.
     exact: exact kd (``kd_assign``) joined back to the payload rows, else
     the sample-walk kd assigned map-side.
+    n_rows_hint: the exact row count of the input, which saves the count
+    job; the exact kd fails loudly if it is too small.
     payload_source: "column" is the only mode (payload bytes always come
     from the input table); kept because perfbench/harness.py passes it.
     fail_after_tiles: test hook — encode only the first K tiles (by path
@@ -247,8 +252,9 @@ def run_tiler(
     to tiles_files/<tile_id>.bin from the Python worker (the 3D Tiles
     per-tile-file layout; on a cluster this is shared/object storage) and
     the parquet carries metadata only — the scale mode.
-    Returns ``finish`` = "local" (driver roll-up of the leaf stats) or
-    "sharded:d<k>" (distributed roll-up, executor-written subtree tilesets).
+    Returns ``finish`` = "local" (driver roll-up of the leaf stats) or,
+    above ``SHARD_TILES`` estimated leaves, "sharded:d<k>" (distributed
+    roll-up, executor-written subtree tilesets).
     """
     import time
 
@@ -272,27 +278,25 @@ def run_tiler(
     src = features if features is not None else features_df(spark, sf_dir)
     slim = src.select(*SLIM_COLS)
     n_rows = n_rows_hint if n_rows_hint is not None else slim.count()
-    # 100x finish auto-switch: above this many (estimated) leaf tiles the
-    # driver-side finish (metadata collect + roll-up) stops being "tiny" —
-    # lineage, tree roll-up, and the manifest then run distributed, with
-    # executor-sharded external tilesets. The estimate needs no job:
-    # leaves ~= n_rows / kd_tree_max by construction.
-    auto_shard_tiles = int(os.environ.get("SPARK_GRAFT_AUTO_SHARD_TILES", "2048"))
+    # finish choice: the leaf estimate needs no job, since leaves ~=
+    # n_rows / kd_tree_max by construction
     est_leaves = max(1, int(n_rows) // max(kd_tree_max, 1))
-    if manifest_shard_depth is None and est_leaves > auto_shard_tiles:
+    shard_depth = None
+    if est_leaves > SHARD_TILES:
         # shards ~= sqrt(#leaves): driver holds 2^depth stubs, each shard
         # holds ~#leaves/2^depth nodes — both stay far below driver memory
         # out to 10^12 rows (2^31 leaves -> 2^16 shards of ~2^15 leaves)
-        manifest_shard_depth = max(2, (est_leaves.bit_length() + 1) // 2)
+        shard_depth = max(2, (est_leaves.bit_length() + 1) // 2)
     # round encode tasks up to whole waves of the available slots to avoid
     # a straggler tail
     par = spark.sparkContext.defaultParallelism
     n_parts = max(2, -(-(n_rows // ROWS_PER_TASK + 1) // par)) * par
     if exact:
-        # parity path: kd runs on the slim projection (window sorts), the
+        # parity path: exact kd runs on the slim projection, the
         # assignment joins back to the payload rows
         tiled = kd_assign(
-            slim.select("image_id", "x", "y", "z"), kd_tree_max=kd_tree_max, exact=True
+            slim.select("image_id", "x", "y", "z"), kd_tree_max=kd_tree_max,
+            n_rows=n_rows,
         ).localCheckpoint(eager=True)
 
         def assign(df: DataFrame) -> DataFrame:
@@ -311,7 +315,7 @@ def run_tiler(
 
     tiles_dir = os.path.join(out_dir, "tiles")
     lineage_dir = os.path.join(out_dir, "lineage")
-    local = manifest_shard_depth is None
+    local = shard_depth is None
     if with_payload:
         payload_cols = ["tile_id", *SLIM_COLS] + (["bytes"] if features is not None else [])
         todo = assign(src).select(*payload_cols)
@@ -393,11 +397,11 @@ def run_tiler(
         # holds only the top levels + one summary row per shard. The tree is
         # read twice (shards, top levels): materialize it once.
         tree = tile_tree_from_stats(leaf_stats).localCheckpoint(eager=True)
-        m = hierarchy.write_manifest_sharded(tree, out_dir, manifest_shard_depth)
+        m = hierarchy.write_manifest_sharded(tree, out_dir, shard_depth)
         # counts come back on the shard summaries — no extra job on the tree
         n_leaves = m["_n_leaves"]
         n_features = m["root"].get("n_features", 0) if m.get("root") else 0
-        finish = f"sharded:d{manifest_shard_depth}"
+        finish = f"sharded:d{shard_depth}"
     timings["manifest"] = _t() - t0
     return {
         "n_features": int(n_features),

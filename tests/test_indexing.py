@@ -10,8 +10,20 @@ few thousand rows across many range partitions and check the ids against
 the sorted oracle exactly.
 """
 import numpy as np
+import pytest
 
 from py3dtilers_spark.operators.indexing import dense_index
+
+
+@pytest.fixture
+def parts32(spark):
+    """32 range partitions: dense_index sizes its exchange from the
+    session's shuffle partitions."""
+    key = "spark.sql.shuffle.partitions"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    yield
+    spark.conf.set(key, old)
 
 
 def _df(spark, n, seed):
@@ -20,20 +32,20 @@ def _df(spark, n, seed):
     return spark.createDataFrame([(k,) for k in keys], ["k"]), keys
 
 
-def test_dense_index_consumers_agree(spark):
+def test_dense_index_consumers_agree(spark, parts32):
     df, keys = _df(spark, 5000, seed=13)
-    out = dense_index(df, ["k"], "idx", num_partitions=32)
+    out = dense_index(df, ["k"], "idx")
     got = {r["k"]: r["idx"] for r in out.collect()}
     want = {k: i for i, k in enumerate(sorted(keys))}
     assert got == want
 
 
-def test_dense_index_base_and_repeat_runs(spark):
+def test_dense_index_base_and_repeat_runs(spark, parts32):
     """Two separate executions of the same dense_index result must agree
     with each other (spark_partition_id is nondeterministic -- only the
     materialization in dense_index makes the result stable)."""
     df, keys = _df(spark, 3000, seed=29)
-    out = dense_index(df, ["k"], "idx", base=1, num_partitions=32)
+    out = dense_index(df, ["k"], "idx", base=1)
     a = {r["k"]: r["idx"] for r in out.collect()}
     b = {r["k"]: r["idx"] for r in out.collect()}
     want = {k: i + 1 for i, k in enumerate(sorted(keys))}

@@ -2,9 +2,15 @@
 (same semantics as /root/reference/py3dtilers/Common/kd_tree.py:4-42 with the
 documented image_id tie-break; see operators/kd_tree.py docstring)."""
 import pytest
+from pyspark.sql import functions as F
 
 from py3dtilers_spark.data import features_df
-from py3dtilers_spark.operators.kd_tree import kd_assign, kd_leaf_index, kd_oracle
+from py3dtilers_spark.operators.kd_tree import (
+    kd_assign,
+    kd_leaf_index,
+    kd_oracle,
+    kd_sample_walk,
+)
 
 
 @pytest.mark.parametrize("kd_tree_max,sample_mod", [(1, 20), (50, 1), (500, 1)])
@@ -43,8 +49,10 @@ def test_kd_leaf_index_is_dfs_order(spark, sf_smoke):
 
 def test_kd_approx_mode_partitions_everything(spark, sf_smoke):
     feats = features_df(spark, sf_smoke).select("image_id", "x", "y")
-    tiled = kd_assign(feats, kd_tree_max=100, exact=False)
-    assert tiled.count() == feats.count()
+    n = feats.count()
+    walk = kd_sample_walk(feats.select("x", "y"), 100, n)
+    tiled = feats.withColumn("tile_id", walk(F.col("x"), F.col("y")))
+    assert tiled.count() == n
     sizes = [r["count"] for r in tiled.groupBy("tile_id").count().collect()]
     # approx mode: leaf rule fires at <= 2*max before the final split
     assert max(sizes) <= 2 * 100

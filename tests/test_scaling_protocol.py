@@ -137,3 +137,33 @@ def test_job_fingerprint_tracks_source(monkeypatch):
     # the fingerprint covers the files that define the measured job
     assert "py3dtilers_spark/plans/tiler_job.py" in rc._JOB_FILES
     assert "tools/scaling_run.py" in rc._JOB_FILES
+
+
+def test_psi_unreadable_is_no_signal_not_clean(tmp_path, monkeypatch):
+    """An unreadable /proc/pressure yields sentinel records, which psi_stats
+    counts apart from the samples, so the PSI gate fails instead of passing
+    on zeros."""
+    from tools import psi_probe
+
+    monkeypatch.setattr(psi_probe, "_PSI_DIR", str(tmp_path / "missing"))
+    assert psi_probe._read_psi("io") is None
+    prev = {r: psi_probe._read_psi(r) for r in ("io", "memory", "cpu")}
+    p = str(tmp_path / "psi.jsonl")
+    with open(p, "w") as fh:
+        for i in range(10):
+            rec = psi_probe._sample(prev, prev, 1000.0 + 6.0 * i, 6e6)
+            assert rec == {"t": 1000.0 + 6.0 * i, "psi_unavailable": True}
+            fh.write(json.dumps(rec) + "\n")
+    psi = rc.psi_stats(p, 1000.0, 1054.0)
+    assert (psi["n"], psi["unavailable"]) == (0, 10)
+    canary = {"n": 20, "med": 70.0, "p10": 60.0, "min": 50.0, "max": 80.0,
+              "span": 0.95}
+    assert not rc.run_clean(canary, psi=psi)
+    # the same window with readable, idle PSI passes
+    idle = {"some": 0, "full": 0}
+    real = {r: idle for r in ("io", "memory", "cpu")}
+    with open(p, "w") as fh:
+        for i in range(10):
+            fh.write(json.dumps(
+                psi_probe._sample(real, real, 1000.0 + 6.0 * i, 6e6)) + "\n")
+    assert rc.run_clean(canary, psi=rc.psi_stats(p, 1000.0, 1054.0))

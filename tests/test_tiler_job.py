@@ -6,8 +6,11 @@ import os
 
 import numpy as np
 import pytest
+from pyspark.errors import PythonException
 
 from py3dtilers_spark.functions.imaging import decode, psnr, synth_pixels
+from py3dtilers_spark.operators import kd_rank
+from py3dtilers_spark.plans import tiler_job
 from py3dtilers_spark.plans.tiler_job import run_tiler
 
 
@@ -136,7 +139,18 @@ def test_removed_payload_modes_raise(spark, sf_smoke, tmp_path, case):
         run_tiler(spark, "" if "features" in kw else sf_smoke, str(tmp_path / "x"), **kw)
 
 
-def test_pipeline_with_sharded_manifest(spark, sf_smoke, tmp_path):
+def test_exact_run_too_small_n_rows_hint_fails_loudly(
+    spark, sf_smoke, tmp_path, monkeypatch
+):
+    """The exact kd takes run_tiler's row count: a hint below the real
+    count sends an oversized cell to the local finisher, which names the
+    hint instead of finishing it in one task."""
+    monkeypatch.setattr(kd_rank, "LOCAL_CAP", 1000)
+    with pytest.raises(PythonException, match="n_rows=500"):
+        run_tiler(spark, sf_smoke, str(tmp_path / "h"), exact=True, n_rows_hint=500)
+
+
+def test_pipeline_with_sharded_manifest(spark, sf_smoke, tmp_path, monkeypatch):
     """Full pipeline with manifest sharding on: root tileset.json is a stub
     referencing executor-written sub/tileset_*.json files, and the resolved
     tree equals the unsharded run's manifest byte-for-byte."""
@@ -145,9 +159,11 @@ def test_pipeline_with_sharded_manifest(spark, sf_smoke, tmp_path):
     out_a = str(tmp_path / "plain")
     out_b = str(tmp_path / "sharded")
     ra = run_tiler(spark, sf_smoke, out_a, with_payload=False)
-    rb = run_tiler(
-        spark, sf_smoke, out_b, with_payload=False, manifest_shard_depth=2
-    )
+    assert ra["finish"] == "local"
+    monkeypatch.setattr(tiler_job, "SHARD_TILES", 4)
+    rb = run_tiler(spark, sf_smoke, out_b, with_payload=False)
+    # ~12 estimated leaves: the derived shard depth is the minimum, 2
+    assert rb["finish"] == "sharded:d2"
     assert (ra["n_features"], ra["n_tiles"]) == (rb["n_features"], rb["n_tiles"])
     with open(os.path.join(out_a, "tileset.json")) as fh:
         plain = json.load(fh)
@@ -193,7 +209,7 @@ def test_auto_shard_finish(spark, sf_smoke, tmp_path, monkeypatch):
     out_b = str(tmp_path / "auto")
     ra = run_tiler(spark, sf_smoke, out_a, kd_tree_max=300, exact=False)
     assert ra["finish"] == "local"
-    monkeypatch.setenv("SPARK_GRAFT_AUTO_SHARD_TILES", "4")
+    monkeypatch.setattr(tiler_job, "SHARD_TILES", 4)
     rb = run_tiler(spark, sf_smoke, out_b, kd_tree_max=300, exact=False)
     assert rb["finish"].startswith("sharded:")
     assert (ra["n_features"], ra["n_tiles"]) == (rb["n_features"], rb["n_tiles"])

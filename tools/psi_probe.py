@@ -19,6 +19,11 @@ over the wall interval):
   {"t": ..., "io_some": f, "io_full": f, "mem_some": f, "mem_full": f,
    "cpu_some": f}
 
+A host where a PSI file cannot be read (CONFIG_PSI off, no permission)
+gives no signal, not a healthy one: such an interval is written as
+{"t": ..., "psi_unavailable": true}, which psi_stats counts apart from the
+samples, so the gate's minimum-sample rule fails the run.
+
 Protocol note (declared with gate v4, tools/run_chain.py): the measured
 job is a FIXED function of a fixed input at a fixed parallelism, run on
 otherwise-idle guest CPUs; its own healthy stall profile is measured in
@@ -42,9 +47,10 @@ import time
 _PSI_DIR = "/proc/pressure"
 
 
-def _read_psi(res: str) -> dict[str, int]:
-    """{'some': total_us, 'full': total_us} for one resource (missing ->
-    zeros, e.g. /proc/pressure/cpu has no `full` line on older kernels)."""
+def _read_psi(res: str) -> dict[str, int] | None:
+    """{'some': total_us, 'full': total_us} for one resource, or None when
+    the file cannot be read. A missing line reads as 0 (e.g.
+    /proc/pressure/cpu has no `full` line on older kernels)."""
     out = {"some": 0, "full": 0}
     try:
         with open(os.path.join(_PSI_DIR, res)) as fh:
@@ -55,8 +61,27 @@ def _read_psi(res: str) -> dict[str, int]:
                         if tok.startswith("total="):
                             out[parts[0]] = int(tok[6:])
     except (OSError, ValueError):
-        pass
+        return None
     return out
+
+
+def _sample(prev: dict, cur: dict, t_now: float, dt_us: float) -> dict:
+    """One probe record: per-resource stall fractions over the interval, or
+    the ``psi_unavailable`` sentinel when any reading is missing."""
+    if None in prev.values() or None in cur.values():
+        return {"t": round(t_now, 2), "psi_unavailable": True}
+
+    def frac(res: str, kind: str) -> float:
+        return round((cur[res][kind] - prev[res][kind]) / dt_us, 5)
+
+    return {
+        "t": round(t_now, 2),
+        "io_some": frac("io", "some"),
+        "io_full": frac("io", "full"),
+        "mem_some": frac("memory", "some"),
+        "mem_full": frac("memory", "full"),
+        "cpu_some": frac("cpu", "some"),
+    }
 
 
 def main() -> None:
@@ -76,19 +101,7 @@ def main() -> None:
             break
         t_now = time.time()
         cur = {r: _read_psi(r) for r in ("io", "memory", "cpu")}
-        dt_us = max((t_now - t_prev) * 1e6, 1.0)
-        rec = {
-            "t": round(t_now, 2),
-            "io_some": round((cur["io"]["some"] - prev["io"]["some"]) / dt_us, 5),
-            "io_full": round((cur["io"]["full"] - prev["io"]["full"]) / dt_us, 5),
-            "mem_some": round(
-                (cur["memory"]["some"] - prev["memory"]["some"]) / dt_us, 5
-            ),
-            "mem_full": round(
-                (cur["memory"]["full"] - prev["memory"]["full"]) / dt_us, 5
-            ),
-            "cpu_some": round((cur["cpu"]["some"] - prev["cpu"]["some"]) / dt_us, 5),
-        }
+        rec = _sample(prev, cur, t_now, max((t_now - t_prev) * 1e6, 1.0))
         prev, t_prev = cur, t_now
         os.write(fd, (json.dumps(rec) + "\n").encode())
 

@@ -294,8 +294,11 @@ def io_stats(path: str, t0: float, t1: float) -> dict:
 
 
 def psi_stats(path: str, t0: float, t1: float) -> dict:
-    """Summarize the PSI probe series over [t0, t1] (gate v4)."""
+    """Summarize the PSI probe series over [t0, t1] (gate v4). Sentinel
+    records of an unreadable /proc/pressure are counted in ``unavailable``,
+    not as samples, so a host without PSI fails the minimum-sample rule."""
     io_f, mem_f, span_lo, span_hi = [], [], None, None
+    unavailable = 0
     try:
         with open(path) as fh:
             for line in fh:
@@ -304,6 +307,9 @@ def psi_stats(path: str, t0: float, t1: float) -> dict:
                 except json.JSONDecodeError:
                     continue
                 if not (t0 <= rec["t"] <= t1):
+                    continue
+                if rec.get("psi_unavailable"):
+                    unavailable += 1
                     continue
                 io_f.append(rec["io_full"])
                 mem_f.append(rec["mem_full"])
@@ -320,6 +326,7 @@ def psi_stats(path: str, t0: float, t1: float) -> dict:
         "mem_full_mean": round(statistics.mean(mem_f), 4) if mem_f else 0.0,
         "mem_full_max": round(max(mem_f), 4) if mem_f else 0.0,
         "span": round(span, 3),
+        "unavailable": unavailable,
     }
 
 
