@@ -10,8 +10,8 @@ delta-filtered pixel stream under one deflate layer:
   PSNR ~= 46 dB, comfortably above the BASELINE.json 40 dB gate.
 
 Members are written as ``RAWV``/``QNTV`` (vertical delta), atlases as
-``RAWD``/``QNTD`` (horizontal delta); decode also reads the round-5
-``RAWZ``/``QNTZ`` blobs.
+``RAWD``/``QNTD`` (horizontal delta); ``decode`` and ``decode_into`` read
+all four and reject any other magic with a ``ValueError``.
 
 This keeps the *Spark-side plumbing real* (binary columns, Arrow batches,
 decode/encode inside pandas UDFs, per-tile atlas packing) while the codec
@@ -27,17 +27,14 @@ import zlib
 
 import numpy as np
 
-MAGIC_RAW = b"RAWZ"
-MAGIC_QNT = b"QNTZ"
-# Delta-filtered variants (round 6): a horizontal left-neighbor delta over
-# each pixel row (the classic PNG "Sub" filter, distance 1 over the
-# flattened w*3 row) is applied BEFORE the deflate layer. On image-like
-# data the filtered stream is runs-of-near-constants, which deflate both
-# compresses better (4.7x smaller on the atlas corpus) and compresses
-# FASTER (5x: long matches are found immediately instead of via hash-chain
-# probing). The filter is exactly invertible in uint8 (wraparound subtract
-# <-> wraparound cumsum), so the codec stays bit-lossless; decode keeps
-# accepting the round-5 RAWZ/QNTZ magics.
+# Horizontal-delta formats: a left-neighbor delta over each pixel row (the
+# classic PNG "Sub" filter, distance 1 over the flattened w*3 row) is
+# applied BEFORE the deflate layer. On image-like data the filtered stream
+# is runs-of-near-constants, which deflate both compresses better (4.7x
+# smaller on the atlas corpus) and compresses FASTER (5x: long matches are
+# found immediately instead of via hash-chain probing). The filter is
+# exactly invertible in uint8 (wraparound subtract <-> wraparound cumsum),
+# so the codec stays bit-lossless.
 MAGIC_RAWD = b"RAWD"
 MAGIC_QNTD = b"QNTD"
 # Vertical-delta variants (previous-ROW predictor, the PNG "Up" filter):
@@ -170,22 +167,6 @@ def _delta_cols(img: np.ndarray) -> np.ndarray:
     return d
 
 
-def _undelta(
-    body: np.ndarray, h: int, w: int, axis: int, scratch: bool = False
-) -> np.ndarray:
-    """Invert _delta_rows (axis=1) / _delta_cols (axis=0): uint8 cumsum
-    (wraparound accumulate is exactly the mod-256 inverse of the wraparound
-    subtract). scratch=True reuses the per-worker buffer (valid until the
-    next call) — only for callers that consume the pixels immediately
-    (decode_into)."""
-    flat = body.reshape(h, w * 3)
-    if scratch:
-        out = _scratch("undelta", flat.shape, np.uint8).reshape(flat.shape)
-        np.cumsum(flat, axis=axis, dtype=np.uint8, out=out)
-        return out.reshape(h, w, 3)
-    return np.cumsum(flat, axis=axis, dtype=np.uint8).reshape(h, w, 3)
-
-
 _MAX_SIDE = 0xFFFF  # the header's "<HH" width and height
 
 
@@ -209,55 +190,44 @@ def encode(img: np.ndarray, fmt: str) -> bytes:
     return MAGIC_QNTD + header + _compress(_delta_rows(q8))
 
 
-_LOSSLESS_MAGICS = (MAGIC_RAW, MAGIC_RAWD, MAGIC_RAWV)
-_LOSSY_MAGICS = (MAGIC_QNT, MAGIC_QNTD, MAGIC_QNTV)
+_LOSSLESS_MAGICS = (MAGIC_RAWD, MAGIC_RAWV)
 _DELTA_AXIS = {MAGIC_RAWD: 1, MAGIC_QNTD: 1, MAGIC_RAWV: 0, MAGIC_QNTV: 0}
+_WH = struct.Struct("<HH")
 
 
 def decode(blob: bytes) -> np.ndarray:
-    """Decode a RAWZ/QNTZ/RAW[DV]/QNT[DV] blob to (h, w, 3) uint8."""
-    magic, (w, h) = blob[:4], struct.unpack("<HH", blob[4:8])
-    body = np.frombuffer(zlib.decompress(blob[8:]), dtype=np.uint8)
-    axis = _DELTA_AXIS.get(magic)
-    if axis is not None:
-        body = _undelta(body, h, w, axis)
-    else:
-        body = body.reshape(h, w, 3)
-    if magic in _LOSSLESS_MAGICS:
-        return body.copy() if magic == MAGIC_RAW else body
-    if magic in _LOSSY_MAGICS:
-        return np.minimum(body.astype(np.uint16) * _QSTEP, 255).astype(np.uint8)
-    raise ValueError(f"unknown image magic {magic!r}")
-
-
-_WH = struct.Struct("<HH")
+    """Decode a RAW[DV]/QNT[DV] blob to a fresh (h, w, 3) uint8 array."""
+    w, h = _WH.unpack_from(blob, 4)
+    out = np.empty((h, w, 3), dtype=np.uint8)
+    decode_into(blob, out)
+    return out
 
 
 def decode_into(blob: bytes, out: np.ndarray) -> None:
     """Decode straight into a destination view (an atlas window): no
     per-member image array is ever allocated — decompress, zero-copy
-    frombuffer view, dequantize through a reused uint16 scratch (the
-    round-to-nearest quantizer emits 64 for inputs >= 254, so *4 must go
-    through a wider dtype + cap). On ballooned-memory hosts the avoided
+    frombuffer view, undo the delta filter (uint8 cumsum: wraparound
+    accumulate is exactly the mod-256 inverse of the wraparound subtract)
+    into a reused scratch, then dequantize through a reused uint16 scratch
+    (the round-to-nearest quantizer emits 64 for inputs >= 254, so *4 must
+    go through a wider dtype + cap). On ballooned-memory hosts the avoided
     per-member allocations are the encode hot path's largest traffic term.
-    Called ~500x per tile: the common QNTV/RAWV member path is hand-inlined
-    (cached Struct, buffer-slice decompress, direct ndarray.cumsum)."""
+    Called ~500x per tile: cached Struct, buffer-slice decompress, direct
+    ndarray.cumsum."""
     magic = blob[:4]
-    w, h = _WH.unpack_from(blob, 4)
-    body = np.frombuffer(zlib.decompress(memoryview(blob)[8:]), dtype=np.uint8)
     axis = _DELTA_AXIS.get(magic)
-    if axis is not None:
-        flat = body.reshape(h, w * 3)
-        und = _scratch("undelta", flat.shape, np.uint8)
-        flat.cumsum(axis=axis, dtype=np.uint8, out=und)
-        body = und.reshape(h, w, 3)
-    else:
-        body = body.reshape(h, w, 3)
+    if axis is None:
+        raise ValueError(f"unknown image magic {magic!r}")
+    w, h = _WH.unpack_from(blob, 4)
+    flat = np.frombuffer(
+        zlib.decompress(memoryview(blob)[8:]), dtype=np.uint8
+    ).reshape(h, w * 3)
+    und = _scratch("undelta", flat.shape, np.uint8)
+    flat.cumsum(axis=axis, dtype=np.uint8, out=und)
+    body = und.reshape(h, w, 3)
     if magic in _LOSSLESS_MAGICS:
         np.copyto(out, body)
         return
-    if magic not in _LOSSY_MAGICS:
-        raise ValueError(f"unknown image magic {magic!r}")
     b16 = _scratch("dec16", body.shape, np.uint16)
     np.copyto(b16, body)  # widen FIRST: a uint8 multiply loop would wrap at q=64
     b16 *= _QSTEP

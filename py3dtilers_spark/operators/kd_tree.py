@@ -62,54 +62,44 @@ def kd_sample_walk(
     sy = spts[y_col].to_numpy()
     scale = n_total / max(len(sx), 1)
 
-    # breadth-first split-tree arrays; node 0 is the root
+    # split-tree arrays; node 0 is the root, children are appended in pairs
+    # (depth-first, left subtree first) and get their depth when created
     thr: list[float] = [0.0]
-    leaf_path: list[str | None] = [None]
-    kids: list[tuple[int, int] | None] = [None]
-
-    def build(node: int, idx: np.ndarray, depth: int, path: str) -> None:
+    left: list[int] = [-1]
+    right: list[int] = [-1]
+    depth: list[int] = [0]
+    leaf_path: list[str] = [""]  # "" for split nodes
+    stack = [(0, np.arange(len(sx)), "")]
+    while stack:
+        node, idx, path = stack.pop()
+        d = depth[node]
         est = len(idx) * scale
-        if est <= kd_tree_max or len(idx) <= 1 or depth > 40:
+        if est <= kd_tree_max or len(idx) <= 1 or d > 40:
             leaf_path[node] = path or "1"  # degenerate single-node tree
-            return
-        vals = sx[idx] if depth % 2 == 0 else sy[idx]
+            continue
+        vals = sx[idx] if d % 2 == 0 else sy[idx]
         med = float(np.median(vals))
         thr[node] = med
-        left = idx[vals < med]
-        right = idx[vals >= med]
-        if len(left) == 0 or len(right) == 0:  # all-equal axis values
+        lo = idx[vals < med]
+        hi = idx[vals >= med]
+        if len(lo) == 0 or len(hi) == 0:  # all-equal axis values
             leaf_path[node] = path or "1"
-            return
-        li, ri = len(thr), len(thr) + 1
-        for _ in range(2):
-            thr.append(0.0)
-            leaf_path.append(None)
-            kids.append(None)
-        kids[node] = (li, ri)
-        build(li, left, depth + 1, path + "0")
-        build(ri, right, depth + 1, path + "1")
-
-    import sys
-
-    old_limit = sys.getrecursionlimit()
-    sys.setrecursionlimit(10000)
-    try:
-        build(0, np.arange(len(sx)), 0, "")
-    finally:
-        sys.setrecursionlimit(old_limit)
+            continue
+        li = len(thr)
+        left[node], right[node] = li, li + 1
+        thr += [0.0, 0.0]
+        left += [-1, -1]
+        right += [-1, -1]
+        depth += [d + 1, d + 1]
+        leaf_path += ["", ""]
+        stack.append((li + 1, hi, path + "1"))
+        stack.append((li, lo, path + "0"))
 
     thr_a = np.asarray(thr)
-    left_a = np.asarray([k[0] if k else -1 for k in kids], dtype=np.int64)
-    right_a = np.asarray([k[1] if k else -1 for k in kids], dtype=np.int64)
-    depth_a = np.zeros(len(thr), dtype=np.int64)
-    stack = [(0, 0)]
-    while stack:
-        n, d = stack.pop()
-        depth_a[n] = d
-        if left_a[n] >= 0:
-            stack.append((left_a[n], d + 1))
-            stack.append((right_a[n], d + 1))
-    paths = np.asarray([p if p is not None else "" for p in leaf_path], dtype=object)
+    left_a = np.asarray(left, dtype=np.int64)
+    right_a = np.asarray(right, dtype=np.int64)
+    depth_a = np.asarray(depth, dtype=np.int64)
+    paths = np.asarray(leaf_path, dtype=object)
 
     bc = df_xy.sparkSession.sparkContext.broadcast(
         (thr_a, left_a, right_a, depth_a, paths)

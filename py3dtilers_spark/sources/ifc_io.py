@@ -269,13 +269,15 @@ _MESH_SCHEMA = (
 
 
 def _mesh_row(solid_id: int, tris) -> dict:
-    """Common (n_tri, surface2, bbox, float32 soup) row off a (T,3,3) mesh."""
+    """Common (n_tri, surface2, bbox, float32 soup) row off a (T,3,3) mesh.
+    An empty mesh (a clip that removed everything) gets surface2 0 and a
+    zero bbox."""
     import numpy as np
 
     from ..operators.geometry import triangle_normals
 
-    _, dbl = triangle_normals(tris)
-    flat = tris.reshape(-1, 3)
+    _, dbl = triangle_normals(tris) if len(tris) else (None, np.zeros(0))
+    flat = tris.reshape(-1, 3) if len(tris) else np.zeros((1, 3))
     return {
         "solid_id": solid_id,
         "n_tri": len(tris),
@@ -1154,41 +1156,6 @@ def ifc_boolean_clips(entities: DataFrame) -> DataFrame:
     )
 
 
-def _mesh_row_pdf(sid: int, tris):
-    """(solid_id, n_tri, surface2, bbox, tris) row — the mesh-table shape
-    shared by swept, BRep, and clipped evaluation."""
-    import numpy as np
-    import pandas as pd
-
-    from ..operators.geometry import triangle_normals
-
-    _, dbl = triangle_normals(tris) if len(tris) else (None, np.zeros(0))
-    flat = tris.reshape(-1, 3) if len(tris) else np.zeros((1, 3))
-    return pd.DataFrame(
-        [
-            {
-                "solid_id": int(sid),
-                "n_tri": int(len(tris)),
-                "surface2": int(np.rint(dbl.sum())),
-                "xmin": float(flat[:, 0].min()),
-                "xmax": float(flat[:, 0].max()),
-                "ymin": float(flat[:, 1].min()),
-                "ymax": float(flat[:, 1].max()),
-                "zmin": float(flat[:, 2].min()),
-                "zmax": float(flat[:, 2].max()),
-                "tris": np.ascontiguousarray(tris, dtype=np.float32).tobytes(),
-            }
-        ]
-    )
-
-
-_MESH_SCHEMA = (
-    "solid_id bigint, n_tri int, surface2 bigint,"
-    " xmin double, xmax double, ymin double, ymax double,"
-    " zmin double, zmax double, tris binary"
-)
-
-
 def ifc_clipped_meshes(
     entities: DataFrame, base_meshes: DataFrame, max_depth: int = 3
 ) -> DataFrame:
@@ -1206,6 +1173,7 @@ def ifc_clipped_meshes(
 
     def eval_clip(pdf):
         import numpy as np
+        import pandas as pd
 
         from ..operators.geometry import clip_mesh_halfspace
 
@@ -1218,7 +1186,7 @@ def ifc_clipped_meshes(
             np.array([row["ox"], row["oy"], row["oz"]]),
             np.array([row["nx"], row["ny"], row["nz"]]),
         )
-        return _mesh_row_pdf(row["result_id"], out)
+        return pd.DataFrame([_mesh_row(int(row["result_id"]), out)])
 
     known = base_meshes
     produced: list[DataFrame] = []

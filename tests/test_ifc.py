@@ -908,3 +908,18 @@ def test_ifc_swept_disk_truncated_line_is_dropped(spark, tmp_path):
     ))
     rows = ifc_sds_meshes(ifc_entities(spark, str(p))).collect()
     assert [r["solid_id"] for r in rows] == [59]
+
+
+def test_mesh_row_empty_mesh():
+    """A mesh with no triangles (a clip that removed everything) is a valid
+    row: no surface, a zero bbox and an empty soup."""
+    import numpy as np
+
+    from py3dtilers_spark.sources.ifc_io import _mesh_row
+
+    row = _mesh_row(7, np.zeros((0, 3, 3)))
+    assert row["solid_id"] == 7
+    assert row["n_tri"] == 0
+    assert row["surface2"] == 0
+    assert row["tris"] == b""
+    assert [row[k] for k in ("xmin", "xmax", "ymin", "ymax", "zmin", "zmax")] == [0.0] * 6

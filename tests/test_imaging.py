@@ -1,11 +1,15 @@
 """Codec + payload plumbing: PSNR >= 40 dB lossy / exact lossless round trip
 (BASELINE.json input_hint invariant), Arrow-batched bytes attachment."""
+import struct
+import zlib
+
 import numpy as np
 import pytest
 
 from py3dtilers_spark.data import features_df
 from py3dtilers_spark.functions.imaging import (
     decode,
+    decode_into,
     encode,
     psnr,
     shelf_pack,
@@ -35,6 +39,17 @@ def test_encode_rejects_side_over_uint16(shape, fmt):
     size = f"{shape[1]}x{shape[0]} px"
     with pytest.raises(ValueError, match=f"{size} .*65535 px limit"):
         encode(img, fmt)
+
+
+@pytest.mark.parametrize("magic", [b"RAWZ", b"QNTZ"])
+def test_retired_magics_are_unknown(magic):
+    # the round-5 formats: magic + "<HH" header + zlib of unfiltered pixels
+    img = synth_pixels(7, 5, 4)
+    blob = magic + struct.pack("<HH", 5, 4) + zlib.compress(img.tobytes())
+    with pytest.raises(ValueError, match="unknown image magic"):
+        decode(blob)
+    with pytest.raises(ValueError, match="unknown image magic"):
+        decode_into(blob, np.empty_like(img))
 
 
 def test_shelf_pack_no_overlap():

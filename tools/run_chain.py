@@ -23,8 +23,9 @@ SELECTION RULE — declared here, in advance of any recorded data:
     (c) it carries >= SCALE_PAIRS bracketed estimates.
   If no such chain exists, bench.py runs one live chain and reports it
   (certified iff clean). EVERY chain ever run is appended to the log —
-  none deleted, none outcome-selected; per-run canary series live under
-  BENCH/canary/.
+  none deleted, none outcome-selected. A chain writes its per-run canary
+  series under BENCH/canary/ and gates on them; each chain record keeps
+  their summaries, and the series of earlier chains are in git history.
 
 RUN_CLEAN — gate version 2 (the chain record carries gate.version; the
 selection rule only accepts chains recorded under the CURRENT gate, since
