@@ -11,7 +11,8 @@ delta-filtered pixel stream under one deflate layer:
 
 Members are written as ``RAWV``/``QNTV`` (vertical delta), atlases as
 ``RAWD``/``QNTD`` (horizontal delta); ``decode`` and ``decode_into`` read
-all four and reject any other magic with a ``ValueError``.
+all four and reject any other magic, or a blob cut short of its 8-byte
+header or of the w*h*3 body the header declares, with a ``ValueError``.
 
 This keeps the *Spark-side plumbing real* (binary columns, Arrow batches,
 decode/encode inside pandas UDFs, per-tile atlas packing) while the codec
@@ -195,9 +196,20 @@ _DELTA_AXIS = {MAGIC_RAWD: 1, MAGIC_QNTD: 1, MAGIC_RAWV: 0, MAGIC_QNTV: 0}
 _WH = struct.Struct("<HH")
 
 
+def _size(blob: bytes) -> tuple[int, int]:
+    """(w, h) from the blob's header; a blob too short to hold the 8-byte
+    header raises a ValueError."""
+    try:
+        return _WH.unpack_from(blob, 4)
+    except struct.error:
+        raise ValueError(
+            f"image blob of {len(blob)} bytes is shorter than its 8-byte header"
+        ) from None
+
+
 def decode(blob: bytes) -> np.ndarray:
     """Decode a RAW[DV]/QNT[DV] blob to a fresh (h, w, 3) uint8 array."""
-    w, h = _WH.unpack_from(blob, 4)
+    w, h = _size(blob)
     out = np.empty((h, w, 3), dtype=np.uint8)
     decode_into(blob, out)
     return out
@@ -213,15 +225,20 @@ def decode_into(blob: bytes, out: np.ndarray) -> None:
     go through a wider dtype + cap). On ballooned-memory hosts the avoided
     per-member allocations are the encode hot path's largest traffic term.
     Called ~500x per tile: cached Struct, buffer-slice decompress, direct
-    ndarray.cumsum."""
+    ndarray.cumsum. A body that does not decompress to the header's
+    w*h*3 bytes raises a ValueError."""
     magic = blob[:4]
     axis = _DELTA_AXIS.get(magic)
     if axis is None:
         raise ValueError(f"unknown image magic {magic!r}")
-    w, h = _WH.unpack_from(blob, 4)
-    flat = np.frombuffer(
-        zlib.decompress(memoryview(blob)[8:]), dtype=np.uint8
-    ).reshape(h, w * 3)
+    w, h = _size(blob)
+    raw = zlib.decompress(memoryview(blob)[8:])
+    if len(raw) != h * w * 3:
+        raise ValueError(
+            f"image body decompresses to {len(raw)} bytes, not the"
+            f" {w}x{h}x3 = {w * h * 3} its header says"
+        )
+    flat = np.frombuffer(raw, dtype=np.uint8).reshape(h, w * 3)
     und = _scratch("undelta", flat.shape, np.uint8)
     flat.cumsum(axis=axis, dtype=np.uint8, out=und)
     body = und.reshape(h, w, 3)

@@ -23,6 +23,7 @@ from __future__ import annotations
 import hashlib
 import json
 import os
+import shutil
 
 import numpy as np
 import pandas as pd
@@ -68,7 +69,6 @@ def _write_lineage_local(meta_pdf: pd.DataFrame, lineage_dir: str, run_id: str) 
     the distributed writer (run_id, cell_id, row_count, checksum,
     completed_at) via one pyarrow file — no Spark job."""
     import datetime
-    import shutil
 
     import pyarrow as pa
     import pyarrow.parquet as pq
@@ -314,8 +314,14 @@ def run_tiler(
     timings["kd"] = _t() - t0
 
     tiles_dir = os.path.join(out_dir, "tiles")
+    files_dir = os.path.join(out_dir, "tiles_files")
     lineage_dir = os.path.join(out_dir, "lineage")
     local = shard_depth is None
+    if not resume:
+        # tiles/ is written in append mode so that a resume adds to it: a
+        # fresh run into an existing output starts from empty tile sinks
+        shutil.rmtree(tiles_dir, ignore_errors=True)
+        shutil.rmtree(files_dir, ignore_errors=True)
     if with_payload:
         payload_cols = ["tile_id", *SLIM_COLS] + (["bytes"] if features is not None else [])
         todo = assign(src).select(*payload_cols)
@@ -335,15 +341,14 @@ def run_tiler(
         # rows, bytes included, by tile; the streaming encoder then atlases
         # each tile in the same stage
         pre = todo.repartition(n_parts, "tile_id").sortWithinPartitions("tile_id")
-        files_dir = None
-        if tile_sink == "files":
-            files_dir = os.path.join(out_dir, "tiles_files")
-            os.makedirs(files_dir, exist_ok=True)
+        sink_dir = files_dir if tile_sink == "files" else None
+        if sink_dir:
+            os.makedirs(sink_dir, exist_ok=True)
         # atlas blobs are already entropy-coded (zlib) — parquet snappy on
         # top is pure JVM CPU for ~0 ratio; uncompressed halves the write
         # path's CPU demand (matters when executor JVM threads contend with
         # the Python workers for the same cores)
-        encode_tiles_stream(pre, files_dir).write.mode("append").option(
+        encode_tiles_stream(pre, sink_dir).write.mode("append").option(
             "compression", "uncompressed"
         ).parquet(tiles_dir)
         timings["encode_write"] = _t() - t0

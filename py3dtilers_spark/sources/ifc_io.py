@@ -23,13 +23,55 @@ returns placement-local meshes; ``ifc_product_meshes_world`` applies the
 resolved placements. Still out of scope: curved surfaces (B-spline,
 toroidal), BRep-vs-BRep booleans, non-uniform transformation operators,
 PnIndex indirection.
+
+Entity ids are read only through ``_ref`` (one id), ``_ref_list`` (a
+``(#a,#b,...)`` list) and ``_all_refs`` (every id of a row), which
+``try_cast`` to bigint: a missing or malformed reference (``$`` where an
+id is required, an empty or absent list, a truncated line) becomes null
+and drops its row at the next equi-join instead of failing the whole scan
+under ANSI mode. Numeric slots (depths, radii, coordinates) keep strict
+casts.
 """
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 _ENTITY_RE = r"^#(\d+)\s*=\s*([A-Z0-9]+)\s*\((.*)\);\s*$"
+
+
+def _ids(s) -> Column:
+    """Every ``#id`` of string column `s`, in STEP order, as array<bigint>."""
+    return F.transform(
+        F.regexp_extract_all(s, F.lit(r"#(\d+)"), F.lit(1)),
+        lambda i: i.try_cast("bigint"),
+    )
+
+
+def _ref(pattern: str, src: str = "args") -> Column:
+    """Group 1 of `pattern` over `src` as an entity id; null when the
+    reference is missing or malformed."""
+    return F.regexp_extract(src, pattern, 1).try_cast("bigint")
+
+
+def _ref_list(pattern: str = r"\(([^()]*)\)\s*$") -> Column:
+    """The ``(#a,#b,...)`` list whose inside is group 1 of `pattern` (by
+    default the row's trailing list) as array<bigint> in STEP order; empty
+    when the list is missing."""
+    return _ids(F.regexp_extract("args", pattern, 1))
+
+
+def _all_refs() -> Column:
+    """Every id of the row: for slots whose position depends on the
+    subtype, the equi-join against the target entity set picks the one."""
+    return _ids(F.col("args"))
+
+
+def _slot(k: int, item: str = r"#(\d+)") -> str:
+    """Pattern for `item` in the k-th (0-based) slot of a flat,
+    comma-separated argument list such as IfcAxis2Placement3D's."""
+    return rf"^(?:[^,]*,){{{k}}}\s*{item}"
+
 
 # IfcProduct subtypes the reference tiler iterates (ifcObjectGeom.py:200-214)
 PRODUCT_CLASSES = (
@@ -44,38 +86,81 @@ PRODUCT_CLASSES = (
 def ifc_entities(spark: SparkSession, path: str) -> DataFrame:
     """Distributed STEP scan -> (entity_id bigint, ifc_class string,
     args string). Non-entity lines (header, comments) are dropped."""
-    lines = spark.read.text(path)
-    return (
-        lines.select(
-            F.regexp_extract("value", _ENTITY_RE, 1).alias("eid_s"),
-            F.regexp_extract("value", _ENTITY_RE, 2).alias("ifc_class"),
-            F.regexp_extract("value", _ENTITY_RE, 3).alias("args"),
-        )
-        .where("eid_s <> ''")
-        .select(
-            F.col("eid_s").cast("bigint").alias("entity_id"),
-            "ifc_class",
-            "args",
-        )
-    )
+    return spark.read.text(path).select(
+        _ref(_ENTITY_RE, "value").alias("entity_id"),
+        F.regexp_extract("value", _ENTITY_RE, 2).alias("ifc_class"),
+        F.regexp_extract("value", _ENTITY_RE, 3).alias("args"),
+    ).where(F.col("entity_id").isNotNull())
 
 
 def ifc_class_counts(entities: DataFrame) -> DataFrame:
     return entities.groupBy("ifc_class").agg(F.count(F.lit(1)).alias("n"))
 
 
-def ifc_cartesian_points(entities: DataFrame) -> DataFrame:
-    """IFCCARTESIANPOINT args '(x,y[,z])' -> (entity_id, x, y, z). Pure
-    column math (split + cast); z defaults to 0 for 2-D points."""
-    pts = entities.where(F.col("ifc_class") == "IFCCARTESIANPOINT").select(
+def _xyz(entities: DataFrame, ifc_class: str) -> DataFrame:
+    """`ifc_class` args '(x,y[,z])' -> (entity_id, x, y, z). Pure column
+    math (split + cast); z defaults to 0 for 2-D rows."""
+    rows = entities.where(F.col("ifc_class") == ifc_class).select(
         "entity_id",
         F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
     )
-    return pts.select(
+    return rows.select(
         "entity_id",
         F.element_at("c", 1).cast("double").alias("x"),
         F.element_at("c", 2).cast("double").alias("y"),
         F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0)).alias("z"),
+    )
+
+
+def ifc_cartesian_points(entities: DataFrame) -> DataFrame:
+    """IFCCARTESIANPOINT rows -> (entity_id, x, y, z)."""
+    return _xyz(entities, "IFCCARTESIANPOINT")
+
+
+def _directions(entities: DataFrame) -> DataFrame:
+    """IFCDIRECTION rows -> (entity_id, x, y, z)."""
+    return _xyz(entities, "IFCDIRECTION")
+
+
+def _axis2_placements(entities: DataFrame) -> DataFrame:
+    """IfcAxis2Placement3D(#loc, #axis|$, #refdir|$) -> (plc_id, loc_id,
+    axis_id, ref_id); an unset ($) axis or refdir id is null."""
+    return entities.where(F.col("ifc_class") == "IFCAXIS2PLACEMENT3D").select(
+        F.col("entity_id").alias("plc_id"),
+        _ref(_slot(0)).alias("loc_id"),
+        _ref(_slot(1)).alias("axis_id"),
+        _ref(_slot(2)).alias("ref_id"),
+    )
+
+
+def _polyline_points(entities: DataFrame) -> DataFrame:
+    """IFCPOLYLINE vertices -> (curve_id, pos, x, y, z); posexplode keeps
+    STEP argument order."""
+    polys = entities.where(F.col("ifc_class") == "IFCPOLYLINE").select(
+        F.col("entity_id").alias("curve_id"),
+        F.posexplode(_ref_list(r"\(([^()]*)\)")).alias("pos", "pt_id"),
+    )
+    pts = ifc_cartesian_points(entities).withColumnRenamed("entity_id", "pt_id")
+    return polys.join(pts, "pt_id").select("curve_id", "pos", "x", "y", "z")
+
+
+def _point_lists(entities: DataFrame) -> DataFrame:
+    """IFCCARTESIANPOINTLIST3D rows -> (coord_id, vpos, x, y, z), vpos the
+    0-based position of the '(x,y,z)' triple in the list."""
+    return entities.where(
+        F.col("ifc_class") == "IFCCARTESIANPOINTLIST3D"
+    ).select(
+        F.col("entity_id").alias("coord_id"),
+        F.posexplode(
+            F.expr(r"regexp_extract_all(args, '\\(([^()]+)\\)', 1)")
+        ).alias("vpos", "xyz_s"),
+    ).select(
+        "coord_id", "vpos", F.split("xyz_s", ",").alias("c"),
+    ).select(
+        "coord_id", "vpos",
+        F.element_at("c", 1).cast("double").alias("x"),
+        F.element_at("c", 2).cast("double").alias("y"),
+        F.element_at("c", 3).cast("double").alias("z"),
     )
 
 
@@ -94,18 +179,12 @@ def ifc_containment(entities: DataFrame) -> DataFrame:
     one (container_id, entity_id) row per contained element: the id-list is
     regexp-isolated and exploded, then both sides are plain bigints for the
     downstream equi-joins."""
-    rels = entities.where(
+    return entities.where(
         F.col("ifc_class") == "IFCRELCONTAINEDINSPATIALSTRUCTURE"
     ).select(
-        F.regexp_extract("args", r"\(([^()]*)\)\s*,\s*#(\d+)\s*$", 1).alias("members"),
-        F.regexp_extract("args", r"\(([^()]*)\)\s*,\s*#(\d+)\s*$", 2)
-        .cast("bigint")
-        .alias("container_id"),
+        _ref(r"\([^()]*\)\s*,\s*#(\d+)\s*$").alias("container_id"),
+        F.explode(_ref_list(r"\(([^()]*)\)\s*,\s*#\d+\s*$")).alias("entity_id"),
     )
-    return rels.select(
-        "container_id",
-        F.explode(F.split(F.regexp_replace("members", r"[#\s]", ""), ",")).alias("m"),
-    ).select("container_id", F.col("m").cast("bigint").alias("entity_id"))
 
 
 def ifc_group_by_class_and_container(entities: DataFrame) -> DataFrame:
@@ -135,7 +214,7 @@ def ifc_swept_solids(entities: DataFrame) -> DataFrame:
     """IFCEXTRUDEDAREASOLID rows -> (solid_id, profile_id, depth)."""
     return entities.where(F.col("ifc_class") == "IFCEXTRUDEDAREASOLID").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("profile_id"),
+        _ref(r"^#(\d+)").alias("profile_id"),
         F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("depth"),
     )
 
@@ -150,52 +229,20 @@ def ifc_product_solids(entities: DataFrame) -> DataFrame:
     # (IfcSlab/IfcDoor append trailing attributes), so instead of position
     # we explode EVERY #ref of the product row and let the equi-join against
     # the IFCPRODUCTDEFINITIONSHAPE entity set pick the representation one.
-    prods = (
-        entities.where(F.col("ifc_class").isin(*PRODUCT_CLASSES))
-        .select(
-            "entity_id",
-            "ifc_class",
-            F.regexp_extract("args", r"^'([^']*)'", 1).alias("global_id"),
-            F.explode(
-                F.expr(r"regexp_extract_all(args, '#(\\d+)', 1)")
-            ).alias("ref_s"),
-        )
-        .select(
-            "entity_id", "ifc_class", "global_id",
-            F.col("ref_s").cast("bigint").alias("pds_id"),
-        )
+    prods = entities.where(F.col("ifc_class").isin(*PRODUCT_CLASSES)).select(
+        "entity_id",
+        "ifc_class",
+        F.regexp_extract("args", r"^'([^']*)'", 1).alias("global_id"),
+        F.explode(_all_refs()).alias("pds_id"),
     )
     # the trailing parenthesized ref-list of PDS / ShapeRepresentation args
-    tail_list = r"\(([^()]*)\)\s*$"
-    pds = (
-        entities.where(F.col("ifc_class") == "IFCPRODUCTDEFINITIONSHAPE")
-        .select(
-            F.col("entity_id").alias("pds_id"),
-            F.explode(
-                F.split(
-                    F.regexp_replace(
-                        F.regexp_extract("args", tail_list, 1), r"[#\s]", ""
-                    ),
-                    ",",
-                )
-            ).alias("rep_s"),
-        )
-        .select("pds_id", F.col("rep_s").cast("bigint").alias("rep_id"))
+    pds = entities.where(F.col("ifc_class") == "IFCPRODUCTDEFINITIONSHAPE").select(
+        F.col("entity_id").alias("pds_id"),
+        F.explode(_ref_list()).alias("rep_id"),
     )
-    reps = (
-        entities.where(F.col("ifc_class") == "IFCSHAPEREPRESENTATION")
-        .select(
-            F.col("entity_id").alias("rep_id"),
-            F.explode(
-                F.split(
-                    F.regexp_replace(
-                        F.regexp_extract("args", tail_list, 1), r"[#\s]", ""
-                    ),
-                    ",",
-                )
-            ).alias("item_s"),
-        )
-        .select("rep_id", F.col("item_s").cast("bigint").alias("solid_id"))
+    reps = entities.where(F.col("ifc_class") == "IFCSHAPEREPRESENTATION").select(
+        F.col("entity_id").alias("rep_id"),
+        F.explode(_ref_list()).alias("solid_id"),
     )
     return (
         prods.join(pds, "pds_id")
@@ -345,7 +392,7 @@ def _profile_rings(entities: DataFrame):
     ).select(
         "profile_id",
         F.lit("ring").alias("ptype"),
-        F.regexp_extract("args", r"#(\d+)\s*$", 1).cast("bigint").alias("curve_id"),
+        _ref(r"#(\d+)\s*$").alias("curve_id"),
         F.lit(0.0).alias("xdim"),
         F.lit(0.0).alias("ydim"),
     )
@@ -381,23 +428,9 @@ def _profile_rings(entities: DataFrame):
         F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("ydim"),
     )
     prof = arb.unionByName(rect).unionByName(circ).unionByName(hollow)
-
-    # ordered polyline vertices: posexplode keeps STEP argument order
-    polys = entities.where(F.col("ifc_class") == "IFCPOLYLINE").select(
-        F.col("entity_id").alias("curve_id"),
-        F.posexplode(
-            F.split(
-                F.regexp_replace(
-                    F.regexp_extract("args", r"\(([^()]*)\)", 1), r"[#\s]", ""
-                ),
-                ",",
-            )
-        ).alias("pos", "pt_s"),
-    ).select("curve_id", "pos", F.col("pt_s").cast("bigint").alias("pt_id"))
-    pts = ifc_cartesian_points(entities).selectExpr(
-        "entity_id AS pt_id", "x AS px", "y AS py"
+    ring_rows = _polyline_points(entities).selectExpr(
+        "curve_id", "pos", "x AS px", "y AS py"
     )
-    ring_rows = polys.join(pts, "pt_id").select("curve_id", "pos", "px", "py")
     return prof, ring_rows
 
 
@@ -417,7 +450,7 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
 
     sds = entities.where(F.col("ifc_class") == "IFCSWEPTDISKSOLID").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("curve_id"),
+        _ref(r"^#(\d+)").alias("curve_id"),
         F.regexp_extract("args", r"#\d+\s*,\s*([0-9][0-9.Ee+\-]*)", 1)
         .cast("double")
         .alias("radius"),
@@ -441,22 +474,8 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
         & ~F.col("_p_start").rlike(r"^[0-9.+\-]")
         & ~F.col("_p_end").rlike(r"^[0-9.+\-]")
     ).drop("_p_start", "_p_end")
-    polys = entities.where(F.col("ifc_class") == "IFCPOLYLINE").select(
-        F.col("entity_id").alias("curve_id"),
-        F.posexplode(
-            F.split(
-                F.regexp_replace(
-                    F.regexp_extract("args", r"\(([^()]*)\)", 1), r"[#\s]", ""
-                ),
-                ",",
-            )
-        ).alias("pos", "pt_s"),
-    ).select("curve_id", "pos", F.col("pt_s").cast("bigint").alias("pt_id"))
-    pts3 = ifc_cartesian_points(entities).withColumnRenamed("entity_id", "pt_id")
-    rows = (
-        sds.join(polys, "curve_id")
-        .join(pts3, "pt_id")
-        .select("solid_id", "radius", "inner_radius", "pos", "x", "y", "z")
+    rows = sds.join(_polyline_points(entities), "curve_id").select(
+        "solid_id", "radius", "inner_radius", "pos", "x", "y", "z"
     )
 
     def eval_sds(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -485,24 +504,16 @@ def ifc_revolved_solids(entities: DataFrame) -> DataFrame:
     slot may be ``$``, so argument position is unreliable)."""
     rev = entities.where(F.col("ifc_class") == "IFCREVOLVEDAREASOLID").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("profile_id"),
+        _ref(r"^#(\d+)").alias("profile_id"),
         F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("angle"),
-        F.explode(
-            F.expr(r"regexp_extract_all(args, '#(\\d+)', 1)")
-        ).alias("ref_s"),
-    ).select(
-        "solid_id", "profile_id", "angle",
-        F.col("ref_s").cast("bigint").alias("axis_id"),
+        F.explode(_all_refs()).alias("axis_id"),
     )
     axis1 = entities.where(F.col("ifc_class") == "IFCAXIS1PLACEMENT").select(
         F.col("entity_id").alias("axis_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("loc_id"),
-        # Axis slot may be '$': the regexp then misses and yields '' — ANSI
-        # cast would throw, try_cast -> null (defaults applied in the UDF)
-        F.expr(
-            r"try_cast(regexp_extract(args, '#(\\d+)\\s*\\)?\\s*$', 1)"
-            r" AS bigint)"
-        ).alias("dir_id"),
+        _ref(r"^#(\d+)").alias("loc_id"),
+        # Axis slot may be '$': its id is then null (defaults applied in
+        # the UDF)
+        _ref(r"#(\d+)\s*\)?\s*$").alias("dir_id"),
     )
     return rev.join(F.broadcast(axis1), "axis_id")
 
@@ -519,13 +530,8 @@ def ifc_revolved_meshes(entities: DataFrame, segments: int = 32) -> DataFrame:
     swept-solid mesh table."""
     solids = ifc_revolved_solids(entities)
     prof, ring_rows = _profile_rings(entities)
-    dirs = entities.where(F.col("ifc_class") == "IFCDIRECTION").select(
-        F.col("entity_id").alias("dir_id"),
-        F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
-    ).select(
-        "dir_id",
-        F.element_at("c", 1).cast("double").alias("adx"),
-        F.element_at("c", 2).cast("double").alias("ady"),
+    dirs = _directions(entities).selectExpr(
+        "entity_id AS dir_id", "x AS adx", "y AS ady"
     )
     locs = ifc_cartesian_points(entities).selectExpr(
         "entity_id AS loc_id", "x AS aox", "y AS aoy"
@@ -596,12 +602,8 @@ def ifc_pfs_meshes(entities: DataFrame) -> DataFrame:
         F.col("ifc_class") == "IFCPOLYGONALFACESET"
     ).select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("coord_id"),
-        F.explode(
-            F.expr(r"regexp_extract_all(args, '#(\\d+)', 1)")
-        ).alias("ref_s"),
-    ).select(
-        "solid_id", "coord_id", F.col("ref_s").cast("bigint").alias("face_id")
+        _ref(r"^#(\d+)").alias("coord_id"),
+        F.explode(_all_refs()).alias("face_id"),
     )
     # loop groups per face: group 0 is the outer ring, the rest are voids
     # (the WithVoids inner-list wrapper adds a paren level but the innermost
@@ -621,24 +623,12 @@ def ifc_pfs_meshes(entities: DataFrame) -> DataFrame:
         .alias("pos", "idx_s"),
     ).select(
         "face_id", "bound_id", "is_outer", "pos",
-        F.col("idx_s").cast("bigint").alias("vidx"),
+        F.col("idx_s").try_cast("bigint").alias("vidx"),
     )
-    coords = entities.where(
-        F.col("ifc_class") == "IFCCARTESIANPOINTLIST3D"
-    ).select(
-        F.col("entity_id").alias("coord_id"),
-        F.posexplode(
-            F.expr(r"regexp_extract_all(args, '\\(([^()]+)\\)', 1)")
-        ).alias("vpos", "xyz_s"),
-    ).select(
+    coords = _point_lists(entities).select(
         "coord_id",
         (F.col("vpos") + 1).alias("vidx"),  # STEP indices are 1-based
-        F.split("xyz_s", ",").alias("c"),
-    ).select(
-        "coord_id", "vidx",
-        F.element_at("c", 1).cast("double").alias("x"),
-        F.element_at("c", 2).cast("double").alias("y"),
-        F.element_at("c", 3).cast("double").alias("z"),
+        "x", "y", "z",
     )
     rows = (
         pfs.join(face_loops, "face_id")
@@ -666,8 +656,7 @@ def ifc_tfs_meshes(entities: DataFrame) -> DataFrame:
         F.col("ifc_class") == "IFCTRIANGULATEDFACESET"
     ).select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"^#(\d+)", 1).cast("bigint").alias("coord_id"),
-        "args",
+        _ref(r"^#(\d+)").alias("coord_id"),
     )
     # derived from `entities` directly (not from `tfs`) so the cogroup of
     # verts and faces is not an ambiguous self-join on solid_id
@@ -682,23 +671,8 @@ def ifc_tfs_meshes(entities: DataFrame) -> DataFrame:
             )
         ).alias("fpos", "tri_s"),
     )
-    coords = entities.where(
-        F.col("ifc_class") == "IFCCARTESIANPOINTLIST3D"
-    ).select(
-        F.col("entity_id").alias("coord_id"),
-        F.posexplode(
-            F.expr(r"regexp_extract_all(args, '\\(([^()]+)\\)', 1)")
-        ).alias("vpos", "xyz_s"),
-    )
-    verts = tfs.select("solid_id", "coord_id").join(coords, "coord_id").select(
-        "solid_id",
-        "vpos",
-        F.split("xyz_s", ",").alias("c"),
-    ).select(
-        "solid_id", "vpos",
-        F.element_at("c", 1).cast("double").alias("vx"),
-        F.element_at("c", 2).cast("double").alias("vy"),
-        F.element_at("c", 3).cast("double").alias("vz"),
+    verts = tfs.join(_point_lists(entities), "coord_id").selectExpr(
+        "solid_id", "vpos", "x AS vx", "y AS vy", "z AS vz"
     )
 
     def assemble(vpdf, fpdf):
@@ -745,78 +719,44 @@ def ifc_mapped_meshes(entities: DataFrame, base_meshes: DataFrame) -> DataFrame:
     NONUNIFORM is out of scope."""
     mapped = entities.where(F.col("ifc_class") == "IFCMAPPEDITEM").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("map_id"),
-        F.regexp_extract("args", r"#\d+\s*,\s*#(\d+)", 1)
-        .cast("bigint")
-        .alias("op_id"),
+        _ref(r"#(\d+)").alias("map_id"),
+        _ref(r"#\d+\s*,\s*#(\d+)").alias("op_id"),
     )
     repmap = entities.where(
         F.col("ifc_class") == "IFCREPRESENTATIONMAP"
     ).select(
         F.col("entity_id").alias("map_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("map_plc_id"),
-        F.regexp_extract("args", r"#\d+\s*,\s*#(\d+)", 1)
-        .cast("bigint")
-        .alias("src_rep_id"),
+        _ref(r"#(\d+)").alias("map_plc_id"),
+        _ref(r"#\d+\s*,\s*#(\d+)").alias("src_rep_id"),
     )
-    src_items = entities.where(
-        F.col("ifc_class") == "IFCSHAPEREPRESENTATION"
-    ).select(
+    src_items = entities.where(F.col("ifc_class") == "IFCSHAPEREPRESENTATION").select(
         F.col("entity_id").alias("src_rep_id"),
-        F.explode(
-            F.split(
-                F.regexp_replace(
-                    F.regexp_extract("args", r"\(([^()]*)\)\s*$", 1), r"[#\s]", ""
-                ),
-                ",",
-            )
-        ).alias("item_s"),
-    ).select("src_rep_id", F.col("item_s").cast("bigint").alias("base_id"))
+        F.explode(_ref_list()).alias("base_id"),
+    )
 
     # operator slots: Axis1, Axis2, LocalOrigin, Scale[, Axis3] — every slot
-    # but the origin may be '$'
+    # but the origin may be '$' (and slot 5 absent): those read as null
     ops = entities.where(
         F.col("ifc_class") == "IFCCARTESIANTRANSFORMATIONOPERATOR3D"
     ).select(
         F.col("entity_id").alias("op_id"),
-        F.split(F.regexp_replace("args", r"\s", ""), ",").alias("slots"),
-    ).select(
-        "op_id",
-        # Axis/Scale slots may be '$' (and slot 5 absent): regexp misses
-        # yield '' and ANSI cast throws on it — try_cast -> null instead
-        F.expr(
-            r"try_cast(regexp_extract(slots[0], '#(\\d+)', 1) AS bigint)"
-        ).alias("ax1_id"),
-        F.expr(
-            r"try_cast(regexp_extract(slots[1], '#(\\d+)', 1) AS bigint)"
-        ).alias("ax2_id"),
-        F.regexp_extract(F.element_at("slots", 3), r"#(\d+)", 1)
-        .cast("bigint")
-        .alias("org_id"),
-        F.expr("try_cast(try_element_at(slots, 4) AS double)").alias("scale"),
-        F.expr(
-            r"try_cast(regexp_extract(coalesce(try_element_at(slots, 5), ''),"
-            r" '#(\\d+)', 1) AS bigint)"
-        ).alias("ax3_id"),
+        _ref(_slot(0)).alias("ax1_id"),
+        _ref(_slot(1)).alias("ax2_id"),
+        _ref(_slot(2)).alias("org_id"),
+        F.regexp_extract("args", _slot(3, r"([^,\s]*)"), 1)
+        .try_cast("double")
+        .alias("scale"),
+        _ref(_slot(4)).alias("ax3_id"),
     )
-    dirs = entities.where(F.col("ifc_class") == "IFCDIRECTION").select(
-        F.col("entity_id").alias("dir_id"),
-        F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
-    ).select(
-        "dir_id",
-        F.element_at("c", 1).cast("double").alias("vx"),
-        F.element_at("c", 2).cast("double").alias("vy"),
-        F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0))
-        .alias("vz"),
-    )
+    dirs = _directions(entities)
     pts3 = ifc_cartesian_points(entities)
 
     def dir_cols(alias, default):
         d = dirs.select(
-            F.col("dir_id").alias(f"{alias}_id"),
-            F.col("vx").alias(f"{alias}x"),
-            F.col("vy").alias(f"{alias}y"),
-            F.col("vz").alias(f"{alias}z"),
+            F.col("entity_id").alias(f"{alias}_id"),
+            F.col("x").alias(f"{alias}x"),
+            F.col("y").alias(f"{alias}y"),
+            F.col("z").alias(f"{alias}z"),
         )
         return d, [
             F.coalesce(F.col(f"{alias}{c}"), F.lit(v)).alias(f"{alias}{c}")
@@ -827,11 +767,8 @@ def ifc_mapped_meshes(entities: DataFrame, base_meshes: DataFrame) -> DataFrame:
     d2, c2 = dir_cols("ax2", (0.0, 1.0, 0.0))
     d3, c3 = dir_cols("ax3", (0.0, 0.0, 1.0))
     origins = pts3.selectExpr("entity_id AS org_id", "x AS otx", "y AS oty", "z AS otz")
-    map_plc = entities.where(
-        F.col("ifc_class") == "IFCAXIS2PLACEMENT3D"
-    ).select(
-        F.col("entity_id").alias("map_plc_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("map_loc_id"),
+    map_plc = _axis2_placements(entities).selectExpr(
+        "plc_id AS map_plc_id", "loc_id AS map_loc_id"
     )
     map_locs = pts3.selectExpr(
         "entity_id AS map_loc_id", "x AS omx", "y AS omy", "z AS omz"
@@ -900,9 +837,7 @@ def _eval_planar_faces(pdf):
     import numpy as np
     import pandas as pd
 
-    from ..operators.geometry import (
-        ear_clip, ear_clip_with_holes, triangle_normals,
-    )
+    from ..operators.geometry import ear_clip, ear_clip_with_holes
 
     out_tris: list[np.ndarray] = []
     for _, face in pdf.groupby("face_id"):
@@ -966,29 +901,11 @@ def _eval_planar_faces(pdf):
         if len(tri3):
             out_tris.append(tri3)
 
-    sid = int(pdf["solid_id"].iloc[0])
     if not out_tris:
         tris = np.empty((0, 3, 3), dtype=np.float64)
     else:
         tris = np.concatenate(out_tris, axis=0)
-    _, dbl = triangle_normals(tris) if len(tris) else (None, np.zeros(0))
-    flat = tris.reshape(-1, 3) if len(tris) else np.zeros((1, 3))
-    return pd.DataFrame(
-        [
-            {
-                "solid_id": sid,
-                "n_tri": int(len(tris)),
-                "surface2": int(np.rint(dbl.sum())),
-                "xmin": float(flat[:, 0].min()),
-                "xmax": float(flat[:, 0].max()),
-                "ymin": float(flat[:, 1].min()),
-                "ymax": float(flat[:, 1].max()),
-                "zmin": float(flat[:, 2].min()),
-                "zmax": float(flat[:, 2].max()),
-                "tris": np.ascontiguousarray(tris, dtype=np.float32).tobytes(),
-            }
-        ]
-    )
+    return pd.DataFrame([_mesh_row(int(pdf["solid_id"].iloc[0]), tris)])
 
 
 def ifc_brep_meshes(entities: DataFrame) -> DataFrame:
@@ -1005,46 +922,29 @@ def ifc_brep_meshes(entities: DataFrame) -> DataFrame:
     the mesh kernel only ever sees ONE brep's rows per task. Curved
     surfaces / boolean results still need a solid-modeling engine and stay
     documented out of scope."""
-    tail_list = r"\(([^()]*)\)\s*$"
-
     breps = entities.where(F.col("ifc_class") == "IFCFACETEDBREP").select(
         F.col("entity_id").alias("solid_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("shell_id"),
+        _ref(r"#(\d+)").alias("shell_id"),
     )
     shells = entities.where(F.col("ifc_class") == "IFCCLOSEDSHELL").select(
         F.col("entity_id").alias("shell_id"),
-        F.explode(
-            F.split(
-                F.regexp_replace(F.regexp_extract("args", tail_list, 1), r"[#\s]", ""),
-                ",",
-            )
-        ).alias("face_s"),
-    ).select("shell_id", F.col("face_s").cast("bigint").alias("face_id"))
+        F.explode(_ref_list()).alias("face_id"),
+    )
     faces = entities.where(F.col("ifc_class") == "IFCFACE").select(
         F.col("entity_id").alias("face_id"),
-        F.explode(
-            F.split(
-                F.regexp_replace(F.regexp_extract("args", tail_list, 1), r"[#\s]", ""),
-                ",",
-            )
-        ).alias("bound_s"),
-    ).select("face_id", F.col("bound_s").cast("bigint").alias("bound_id"))
+        F.explode(_ref_list()).alias("bound_id"),
+    )
     bounds = entities.where(
         F.col("ifc_class").isin("IFCFACEOUTERBOUND", "IFCFACEBOUND")
     ).select(
         F.col("entity_id").alias("bound_id"),
         (F.col("ifc_class") == "IFCFACEOUTERBOUND").alias("is_outer"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("loop_id"),
+        _ref(r"#(\d+)").alias("loop_id"),
     )
     loops = entities.where(F.col("ifc_class") == "IFCPOLYLOOP").select(
         F.col("entity_id").alias("loop_id"),
-        F.posexplode(
-            F.split(
-                F.regexp_replace(F.regexp_extract("args", tail_list, 1), r"[#\s]", ""),
-                ",",
-            )
-        ).alias("pos", "pt_s"),
-    ).select("loop_id", "pos", F.col("pt_s").cast("bigint").alias("pt_id"))
+        F.posexplode(_ref_list()).alias("pos", "pt_id"),
+    )
     pts = ifc_cartesian_points(entities).selectExpr("entity_id AS pt_id", "x", "y", "z")
 
     rows = (
@@ -1055,14 +955,7 @@ def ifc_brep_meshes(entities: DataFrame) -> DataFrame:
         .join(pts, "pt_id")
         .select("solid_id", "face_id", "bound_id", "is_outer", "pos", "x", "y", "z")
     )
-
-    schema = (
-        "solid_id bigint, n_tri int, surface2 bigint,"
-        " xmin double, xmax double, ymin double, ymax double,"
-        " zmin double, zmax double, tris binary"
-    )
-
-    return rows.groupBy("solid_id").applyInPandas(_eval_planar_faces, schema)
+    return rows.groupBy("solid_id").applyInPandas(_eval_planar_faces, _MESH_SCHEMA)
 
 
 def ifc_points_bbox(entities: DataFrame) -> DataFrame:
@@ -1092,48 +985,24 @@ def ifc_boolean_clips(entities: DataFrame) -> DataFrame:
         F.col("ifc_class") == "IFCBOOLEANCLIPPINGRESULT"
     ).select(
         F.col("entity_id").alias("result_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("first_id"),
-        F.regexp_extract("args", r"#\d+\s*,\s*#(\d+)", 1)
-        .cast("bigint")
-        .alias("hs_id"),
+        _ref(r"#(\d+)").alias("first_id"),
+        _ref(r"#\d+\s*,\s*#(\d+)").alias("hs_id"),
     )
     half = entities.where(F.col("ifc_class") == "IFCHALFSPACESOLID").select(
         F.col("entity_id").alias("hs_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("surface_id"),
+        _ref(r"#(\d+)").alias("surface_id"),
         (F.regexp_extract("args", r"\.(T|F)\.", 1) == "T").alias("agreement"),
     )
     planes = entities.where(F.col("ifc_class") == "IFCPLANE").select(
         F.col("entity_id").alias("surface_id"),
-        F.regexp_extract("args", r"#(\d+)", 1).cast("bigint").alias("placement_id"),
+        _ref(r"#(\d+)").alias("placement_id"),
     )
-    # IfcAxis2Placement3D(#loc, #axis|$, #refdir|$): positional split —
-    # the axis slot may be '$', in which case the schema default +Z applies
-    plc = entities.where(
-        F.col("ifc_class") == "IFCAXIS2PLACEMENT3D"
-    ).select(
-        F.col("entity_id").alias("placement_id"),
-        F.split(F.regexp_replace("args", r"\s", ""), ",").alias("slots"),
-    ).select(
-        "placement_id",
-        F.regexp_extract(F.element_at("slots", 1), r"#(\d+)", 1)
-        .cast("bigint")
-        .alias("loc_id"),
-        # the Axis slot may be '$' (schema default +Z): regexp yields ''
-        # and ANSI cast throws on it — try_cast -> null, default downstream
-        F.expr(
-            r"try_cast(regexp_extract(try_element_at(slots, 2), '#(\\d+)', 1)"
-            r" AS bigint)"
-        ).alias("axis_id"),
+    # the axis slot may be '$' (null id): the schema default +Z applies
+    plc = _axis2_placements(entities).selectExpr(
+        "plc_id AS placement_id", "loc_id", "axis_id"
     )
-    dirs = entities.where(F.col("ifc_class") == "IFCDIRECTION").select(
-        F.col("entity_id").alias("axis_id"),
-        F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
-    ).select(
-        "axis_id",
-        F.element_at("c", 1).cast("double").alias("dx"),
-        F.element_at("c", 2).cast("double").alias("dy"),
-        F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0))
-        .alias("dz"),
+    dirs = _directions(entities).selectExpr(
+        "entity_id AS axis_id", "x AS dx", "y AS dy", "z AS dz"
     )
     locs = ifc_cartesian_points(entities).selectExpr(
         "entity_id AS loc_id", "x AS ox", "y AS oy", "z AS oz"
@@ -1216,35 +1085,8 @@ def _axis2_frames(entities: DataFrame, id_alias: str) -> DataFrame:
     import pandas as pd
     from pyspark.sql.types import ArrayType, DoubleType
 
-    plc = entities.where(
-        F.col("ifc_class") == "IFCAXIS2PLACEMENT3D"
-    ).select(
-        F.col("entity_id").alias(id_alias),
-        F.split(F.regexp_replace("args", r"\s", ""), ",").alias("slots"),
-    ).select(
-        id_alias,
-        F.regexp_extract(F.element_at("slots", 1), r"#(\d+)", 1)
-        .cast("bigint")
-        .alias("loc_id"),
-        F.expr(
-            r"try_cast(regexp_extract(try_element_at(slots, 2), '#(\\d+)', 1)"
-            r" AS bigint)"
-        ).alias("axis_id"),
-        F.expr(
-            r"try_cast(regexp_extract(try_element_at(slots, 3), '#(\\d+)', 1)"
-            r" AS bigint)"
-        ).alias("ref_id"),
-    )
-    dirs = entities.where(F.col("ifc_class") == "IFCDIRECTION").select(
-        F.col("entity_id").alias("dir_id"),
-        F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
-    ).select(
-        "dir_id",
-        F.element_at("c", 1).cast("double").alias("dx"),
-        F.element_at("c", 2).cast("double").alias("dy"),
-        F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0))
-        .alias("dz"),
-    )
+    plc = _axis2_placements(entities).withColumnRenamed("plc_id", id_alias)
+    dirs = _directions(entities)
     locs = ifc_cartesian_points(entities).selectExpr(
         "entity_id AS loc_id", "x AS ox", "y AS oy", "z AS oz"
     )
@@ -1252,13 +1094,13 @@ def _axis2_frames(entities: DataFrame, id_alias: str) -> DataFrame:
         plc.join(F.broadcast(locs), "loc_id")
         .join(
             F.broadcast(dirs.selectExpr(
-                "dir_id AS axis_id", "dx AS azx", "dy AS azy", "dz AS azz"
+                "entity_id AS axis_id", "x AS azx", "y AS azy", "z AS azz"
             )),
             "axis_id", "left",
         )
         .join(
             F.broadcast(dirs.selectExpr(
-                "dir_id AS ref_id", "dx AS arx", "dy AS ary", "dz AS arz"
+                "entity_id AS ref_id", "x AS arx", "y AS ary", "z AS arz"
             )),
             "ref_id", "left",
         )
@@ -1321,14 +1163,8 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
 
     lp = entities.where(F.col("ifc_class") == "IFCLOCALPLACEMENT").select(
         F.col("entity_id").alias("plc_id"),
-        F.expr(
-            r"try_cast(regexp_extract(split(replace(args, ' ', ''), ',')[0],"
-            r" '#(\\d+)', 1) AS bigint)"
-        ).alias("parent_id"),
-        F.expr(
-            r"try_cast(regexp_extract(split(replace(args, ' ', ''), ',')[1],"
-            r" '#(\\d+)', 1) AS bigint)"
-        ).alias("rel_frame_id"),
+        _ref(_slot(0)).alias("parent_id"),
+        _ref(_slot(1)).alias("rel_frame_id"),
     )
     frames = _axis2_frames(entities, "rel_frame_id")
     # frames is the same size class as lp itself — no broadcast hint;
@@ -1412,13 +1248,7 @@ def ifc_product_meshes_world(entities: DataFrame) -> DataFrame:
     local = ifc_product_meshes(entities)
     prod_plc = (
         entities.where(F.col("ifc_class").isin(*PRODUCT_CLASSES))
-        .select(
-            "entity_id",
-            F.explode(
-                F.expr(r"regexp_extract_all(args, '#(\\d+)', 1)")
-            ).alias("ref_s"),
-        )
-        .select("entity_id", F.col("ref_s").cast("bigint").alias("plc_id"))
+        .select("entity_id", F.explode(_all_refs()).alias("plc_id"))
         .join(ifc_world_placements(entities), "plc_id")
         .select("entity_id", "frame")
     )

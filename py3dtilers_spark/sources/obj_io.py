@@ -18,33 +18,37 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 
-def read_obj(spark: SparkSession, path_glob: str) -> DataFrame:
-    """One row per OBJ object: (file, object_name, n_vertices, x, y, z)."""
+def _tagged_lines(spark: SparkSession, path_glob: str) -> DataFrame:
+    """(file, pos, line, obj_name): every trimmed line of every OBJ file,
+    pos its position in the file and obj_name the current 'o'/'g' object
+    ("default" before the first), carried down by a running last_value
+    window ordered by pos."""
     rdd = spark.sparkContext.wholeTextFiles(path_glob)
     raw = spark.createDataFrame(rdd, "file string, content string")
-
-    lines = raw.select(
-        "file", F.explode(F.split("content", "\n")).alias("line")
-    ).withColumn("line", F.trim("line"))
-    # carry the current object name down to each vertex line via a running
-    # last_value window ordered by original position
-    lines = lines.withColumn(
-        "pos", F.monotonically_increasing_id()
+    lines = (
+        raw.select("file", F.posexplode(F.split("content", "\n")).alias("pos", "line"))
+        .withColumn("line", F.trim("line"))
     )
     w = (
         Window.partitionBy("file")
         .orderBy("pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    tagged = lines.withColumn(
+    return lines.withColumn(
         "obj_name",
-        F.last(
-            F.when(
-                F.col("line").rlike("^[og] "), F.expr("substring(line, 3)")
-            ),
-            ignorenulls=True,
-        ).over(w),
-    ).withColumn("obj_name", F.coalesce("obj_name", F.lit("default")))
+        F.coalesce(
+            F.last(
+                F.when(F.col("line").rlike("^[og] "), F.expr("substring(line, 3)")),
+                ignorenulls=True,
+            ).over(w),
+            F.lit("default"),
+        ),
+    )
+
+
+def read_obj(spark: SparkSession, path_glob: str) -> DataFrame:
+    """One row per OBJ object: (file, object_name, n_vertices, x, y, z)."""
+    tagged = _tagged_lines(spark, path_glob)
     verts = tagged.where(F.col("line").rlike("^v ")).select(
         "file",
         "obj_name",
@@ -73,27 +77,7 @@ def read_obj_mesh(spark: SparkSession, path_glob: str) -> DataFrame:
     px, py, pz, u, v, nx, ny, nz, cr, cg, cb) — cr/cg/cb are the optional
     'v x y z r g b' vertex colors, null when the file has none.
     """
-    rdd = spark.sparkContext.wholeTextFiles(path_glob)
-    raw = spark.createDataFrame(rdd, "file string, content string")
-    lines = (
-        raw.select("file", F.posexplode(F.split("content", "\n")).alias("pos", "line"))
-        .withColumn("line", F.trim("line"))
-    )
-    w = (
-        Window.partitionBy("file")
-        .orderBy("pos")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    tagged = lines.withColumn(
-        "obj_name",
-        F.coalesce(
-            F.last(
-                F.when(F.col("line").rlike("^[og] "), F.expr("substring(line, 3)")),
-                ignorenulls=True,
-            ).over(w),
-            F.lit("default"),
-        ),
-    )
+    tagged = _tagged_lines(spark, path_glob)
 
     def _indexed(
         prefix: str, tag: str, ncoord: int, names: list[str], extra=()

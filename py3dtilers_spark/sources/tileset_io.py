@@ -27,7 +27,22 @@ FEATURE_OUT_SCHEMA = (
 
 
 def read_tiles(spark: SparkSession, out_dir: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(out_dir, "tiles"))
+    """The tiles table of a written tileset. A ``tile_sink="files"`` run
+    keeps each payload in tiles_files/<tile_id>.bin and leaves ``atlas``
+    empty; when that directory exists, ``atlas`` is filled from it (a
+    binaryFile read joined on tile_id), so every reader sees the blobs; a
+    tile whose file is missing gets a null atlas."""
+    tiles = spark.read.parquet(os.path.join(out_dir, "tiles"))
+    files_dir = os.path.join(out_dir, "tiles_files")
+    if not os.path.isdir(files_dir):
+        return tiles
+    blobs = spark.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(
+        files_dir
+    ).select(
+        F.regexp_extract("path", r"([^/]*)\.bin$", 1).alias("tile_id"),
+        F.col("content").alias("atlas"),
+    )
+    return tiles.drop("atlas").join(blobs, "tile_id", "left").select(*tiles.columns)
 
 
 def read_manifest(out_dir: str) -> dict:

@@ -923,3 +923,44 @@ def test_mesh_row_empty_mesh():
     assert row["surface2"] == 0
     assert row["tris"] == b""
     assert [row[k] for k in ("xmin", "xmax", "ymin", "ymax", "zmin", "zmax")] == [0.0] * 6
+
+
+def test_ifc_containment_empty_member_list_drops_row(spark, tmp_path):
+    """A relationship whose member list is empty holds no id to read: its
+    row drops, the other relationship's rows remain, and the scan does not
+    fail with CAST_INVALID_INPUT under ANSI mode."""
+    p = tmp_path / "empty_members.ifc"
+    p.write_text(IFC_TEXT.replace("(#23),#10", "(),#10"))
+    rows = ifc_containment(ifc_entities(spark, str(p))).collect()
+    assert sorted((r["container_id"], r["entity_id"]) for r in rows) == [
+        (11, 20), (11, 21), (11, 22)
+    ]
+
+
+def test_ifc_representation_without_items_drops_row(spark, tmp_path):
+    """A shape representation with no item list is a broken reference: only
+    the product that uses it loses its mesh."""
+    from py3dtilers_spark.sources.ifc_io import ifc_product_meshes
+
+    p = tmp_path / "no_items.ifc"
+    p.write_text(IFC_BREP_TEXT.replace(
+        "#98= IFCSHAPEREPRESENTATION($,'Body','Brep',(#141));",
+        "#98= IFCSHAPEREPRESENTATION(#1,'Body');",
+    ))
+    rows = ifc_product_meshes(ifc_entities(spark, str(p))).collect()
+    assert [r["global_id"] for r in rows] == ["SLAB_H"]
+
+
+def test_ifc_ids_have_no_strict_cast():
+    """Every entity id in the IFC scan is read through try_cast: a strict
+    bigint cast appears only on a typed null literal."""
+    import re
+
+    from py3dtilers_spark.sources import ifc_io
+
+    with open(ifc_io.__file__) as fh:
+        src = fh.read()
+    assert not re.search(r"\bAS\s+bigint\b", src, re.IGNORECASE)
+    casts = [m.start() for m in re.finditer(r"""\.cast\(\s*["']bigint["']\s*\)""", src)]
+    assert casts  # the typed null literals are still there
+    assert all(src[:i].endswith("F.lit(None)") for i in casts)

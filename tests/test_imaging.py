@@ -119,3 +119,21 @@ def test_resize_tiles_stage(spark):
         got = decode(bytes(r.bytes))
         want = resize_nearest(synth_pixels(int(ph[k]), int(w[k]), int(h[k])), 12, 12)
         assert (got == want).all()  # png is lossless: exact pixel parity
+
+
+@pytest.mark.parametrize(
+    "blob, cause",
+    [
+        (b"RAWD\x01", "shorter than its 8-byte header"),
+        (
+            b"RAWD" + struct.pack("<HH", 4, 4) + zlib.compress(b"\0" * 10),
+            r"decompresses to 10 bytes, not the 4x4x3 = 48",
+        ),
+    ],
+    ids=["short_header", "short_body"],
+)
+def test_truncated_blob_is_a_named_error(blob, cause):
+    with pytest.raises(ValueError, match=cause):
+        decode(blob)
+    with pytest.raises(ValueError, match=cause):
+        decode_into(blob, np.empty((4, 4, 3), dtype=np.uint8))

@@ -257,3 +257,50 @@ def test_file_tile_sink_fidelity(spark, sf_smoke, tmp_path):
                 assert psnr(got, want) >= 40.0
             checked += 1
     assert checked > 0
+
+
+def test_rerun_without_resume_replaces_output(spark, sf_smoke, tmp_path):
+    """tiles/ is appended to so that a resume can add to it: a second run
+    without resume into the same directory must not count the first run's
+    tiles again."""
+    from py3dtilers_spark.data import features_df
+
+    out = str(tmp_path / "again")
+    n = features_df(spark, sf_smoke).count()
+    for _ in range(2):
+        stats = run_tiler(spark, sf_smoke, out, kd_tree_max=300, exact=False)
+        assert stats["n_features"] == n
+    tiles = _read_tiles(spark, out)
+    assert tiles["tile_id"].is_unique
+    assert len(tiles) == stats["n_tiles"]
+    assert int(tiles["n_features"].sum()) == n
+    with open(os.path.join(out, "tileset.json")) as fh:
+        assert json.load(fh)["root"]["n_features"] == n
+
+
+def test_file_sink_reads_back_as_features(spark, sf_smoke, tmp_path):
+    """read_tiles fills a files-sink output's atlas column from
+    tiles_files/, so tiles_to_features gives every member back."""
+    from py3dtilers_spark.data import features_df
+    from py3dtilers_spark.sources.tileset_io import read_tiles, tiles_to_features
+
+    out = str(tmp_path / "fs_back")
+    stats = run_tiler(
+        spark, sf_smoke, out, kd_tree_max=300, exact=False, tile_sink="files"
+    )
+    tiles = read_tiles(spark, out)
+    assert tiles.count() == stats["n_tiles"]
+    feats = tiles_to_features(tiles).toPandas()
+    assert len(feats) == stats["n_features"]
+    orig = {
+        r["image_id"]: (r["phash"], r["fmt"])
+        for r in features_df(spark, sf_smoke).collect()
+    }
+    for f in feats.itertuples():
+        ph, fmt = orig[f.image_id]
+        want = synth_pixels(ph, f.w, f.h)
+        got = decode(bytes(f.payload))
+        if fmt == "png":
+            assert (got == want).all(), f.image_id
+        else:
+            assert psnr(got, want) >= 40.0, f.image_id
