@@ -1,17 +1,14 @@
 """Spatial cell encoding + point-in-polygon kernels.
 
-Two cell schemes (the engine's stand-ins for H3/S2 — neither lib is in the
-container, and the reference's own spatial key is a plain 1000 m cube,
-/root/reference/py3dtilers/Common/group.py:62-63,201-224):
-
-- ``grid_cell``: flat-grid bigint cell id from floor-divided x/y — pure
-  column math, stays in whole-stage codegen; used for join prefilters and
-  salting keys.
-- ``morton_key``: Z-order (bit-interleaved) key via a vectorized
-  Arrow-batched pandas UDF — numpy bitwise ops over whole batches, the
-  "batched H3/S2 cell encoding" of the north rule. Hierarchical: the key at
-  resolution r is a prefix of the key at r+1 (shift by 2 per level), which
-  is what makes bottom-up tile roll-ups a prefix aggregation.
+One cell scheme (the engine's stand-in for H3/S2 — neither lib is a
+dependency, and the reference's own spatial key is a plain 1000 m cube,
+Common/group.py:62-63,201-224 of the reference): ``morton_key``, a
+Z-order (bit-interleaved) key via a vectorized Arrow-batched pandas UDF —
+numpy bitwise ops over whole batches, the "batched H3/S2 cell encoding" of
+the north rule. Hierarchical: the key at resolution r is a prefix of the
+key at r+1 (shift by 2 per level), which is what makes bottom-up tile
+roll-ups a prefix aggregation. ``ring_bbox_cells_morton`` is its
+driver-side cover of a polygon's bbox (the PIP prefilter's broadcast side).
 
 PIP kernel: vectorized even-odd ray casting over numpy arrays (replaces the
 reference's per-row shapely ``p.within(polygon)`` loop, group.py:173-184).
@@ -28,13 +25,6 @@ from pyspark.sql.types import LongType
 
 # Extent of the synthetic features table (data/features.py).
 X0, Y0 = 1843000.0, 5173000.0
-
-
-def grid_cell(x: Column, y: Column, cell_size: float, x0: float = X0, y0: float = Y0) -> Column:
-    """Flat grid cell id = gx * 2^21 + gy (codegen-friendly, no UDF)."""
-    gx = F.floor((x - F.lit(x0)) / F.lit(cell_size))
-    gy = F.floor((y - F.lit(y0)) / F.lit(cell_size))
-    return (gx * F.lit(1 << 21) + gy).cast(LongType())
 
 
 def _interleave_bits_u32(v: np.ndarray) -> np.ndarray:
@@ -133,24 +123,11 @@ def points_in_polygon(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.nd
     return (crossings.sum(axis=1) % 2).astype(bool)
 
 
-def ring_bbox_cells(ring: np.ndarray, cell_size: float, x0: float = X0, y0: float = Y0):
-    """Grid-cell cover of a ring's bbox (driver-side, for broadcast prefilter)."""
-    gx0 = int(np.floor((ring[:, 0].min() - x0) / cell_size))
-    gx1 = int(np.floor((ring[:, 0].max() - x0) / cell_size))
-    gy0 = int(np.floor((ring[:, 1].min() - y0) / cell_size))
-    gy1 = int(np.floor((ring[:, 1].max() - y0) / cell_size))
-    return [
-        gx * (1 << 21) + gy
-        for gx in range(gx0, gx1 + 1)
-        for gy in range(gy0, gy1 + 1)
-    ]
-
-
 def ring_bbox_cells_morton(ring: np.ndarray, cell_size: float, x0: float = X0, y0: float = Y0):
     """Morton (Z-order) cell cover of a ring's bbox — the broadcast side of
-    the PIP prefilter when features are keyed with ``morton_key``. Same cells
-    as ``ring_bbox_cells``, encoded with the interleaved-bit key so the join
-    key is the hierarchical H3/S2-style index."""
+    the PIP prefilter, whose features are keyed with ``morton_key``: every
+    floor-divided grid cell the bbox touches, encoded with the
+    interleaved-bit key."""
     gx0 = int(np.floor((ring[:, 0].min() - x0) / cell_size))
     gx1 = int(np.floor((ring[:, 0].max() - x0) / cell_size))
     gy0 = int(np.floor((ring[:, 1].min() - y0) / cell_size))

@@ -178,36 +178,17 @@ def tri_doubled_areas(ring: np.ndarray, tris: np.ndarray) -> np.ndarray:
     )
 
 
-def prism_extrude(ring: np.ndarray, z0: float, z1: float) -> np.ndarray:
-    """Extrude a CCW 2-D ring into a closed prism (the reference's LOD1 /
-    extruded-polygon shape, geojson.py:246-334). Returns (T, 3, 3) float64
-    triangles: top cap (ear-clipped, +z normals), bottom cap (reversed
-    winding, -z), and two triangles per side quad, outward-facing.
-    """
-    n = len(ring)
-    caps = ear_clip(ring)
-    tris = []
-    top = np.column_stack([ring, np.full(n, float(z1))])
-    bot = np.column_stack([ring, np.full(n, float(z0))])
-    for i0, i1, i2 in caps:
-        tris.append([top[i0], top[i1], top[i2]])           # CCW seen from +z
-        tris.append([bot[i0], bot[i2], bot[i1]])           # reversed: faces -z
-    for i in range(n):
-        j = (i + 1) % n
-        # CCW ring -> outward side normal = edge dir rotated -90deg
-        tris.append([bot[i], bot[j], top[j]])
-        tris.append([bot[i], top[j], top[i]])
-    return np.asarray(tris, dtype=np.float64)
-
-
-def prism_extrude_with_holes(
-    ring: np.ndarray, holes: list, z0: float, z1: float
+def prism_extrude(
+    ring: np.ndarray, z0: float, z1: float, holes: list = ()
 ) -> np.ndarray:
-    """Extrude a CCW ring with interior holes into a closed prism: annulus
-    caps via ear_clip_with_holes (G1), outward outer walls, and hole walls
-    wound so their normals face INTO each hole (outward for the solid) —
-    the hollow-profile extrusion (e.g. IfcCircleHollowProfileDef pipes)
-    that the plain prism_extrude cannot represent."""
+    """Extrude a CCW 2-D ring, with optional interior holes, into a closed
+    prism (the reference's LOD1 / extruded-polygon shape,
+    geojson.py:246-334). Returns (T, 3, 3) float64 triangles: top cap
+    (ear-clipped via ear_clip_with_holes (G1), +z normals), bottom cap
+    (reversed winding, -z), two triangles per outer side quad,
+    outward-facing, and hole walls wound so their normals face INTO each
+    hole (outward for the solid) — the hollow-profile extrusion of e.g.
+    IfcCircleHollowProfileDef pipes."""
     cap2 = ear_clip_with_holes(ring, holes)  # (T, 3, 2) CCW coords
     tris = []
     for t in cap2:

@@ -10,14 +10,13 @@ Distributed levels run only while some live cell holds more than
 ``LOCAL_CAP`` rows. Each level ranks every row inside its cell by
 (axis value, image_id) with one of two steps:
 
-- ``_rank_step`` while at most ``CELL_SWITCH`` cells are live:
-  ``repartitionByRange(P, tile_id, axis, id)`` gives non-overlapping sorted
-  ranges, a per-(partition, cell) ``row_number`` ranks locally, and an
-  exclusive prefix sum of the per-(partition, cell) counts (a P x C row
-  aggregate, broadcast back) turns local ranks into in-cell ranks. A
-  ``Window.partitionBy("tile_id")`` at the root would partition by a
-  constant key and run the whole dataset through one task; this step never
-  does.
+- ``_rank_step`` while at most ``CELL_SWITCH`` cells are live: the
+  range-exchange rank ``indexing.range_rank`` (the one ``dense_index``
+  uses) grouped by cell — range partitions on (tile_id, axis, id), a
+  per-(partition, cell) ``row_number``, and an exclusive prefix sum of the
+  per-(partition, cell) counts. A ``Window.partitionBy("tile_id")`` at the
+  root would partition by a constant key and run the whole dataset through
+  one task; this step never does.
 - ``_window_step`` once cells are numerous: a per-cell window, which
   hash-partitions well when there are many small cells.
 
@@ -31,6 +30,8 @@ from __future__ import annotations
 import numpy as np
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from .indexing import range_rank
 
 # largest cell finished in one task: the numpy finisher needs ~40 B/row and
 # ~3 us/row, so a 1M-row cell is ~40 MB and a few seconds of task CPU
@@ -64,7 +65,6 @@ def kd_assign(
             " the sample-walk assignment"
         )
     local_cap = max(LOCAL_CAP, 2 * kd_tree_max + 1)
-    parts = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "32"))
     cur = df.withColumn("tile_id", F.lit(""))
     out_schema = cur.schema
     cols = [f.name for f in out_schema.fields]
@@ -77,7 +77,7 @@ def kd_assign(
     while live and max(live.values()) > local_cap:
         axis = "x" if depth % 2 == 0 else "y"
         if len(live) <= CELL_SWITCH:
-            ranked = _rank_step(cur, axis, parts)
+            ranked = _rank_step(cur, axis)
             checkpoint_stepped = False
         else:
             ranked = _window_step(cur, axis)
@@ -174,60 +174,13 @@ def kd_finish_numpy(
     return out
 
 
-def _rank_step(cur: DataFrame, axis: str, parts: int) -> DataFrame:
+def _rank_step(cur: DataFrame, axis: str) -> DataFrame:
     """In-cell exact rank ``_rn`` and cell size ``_n`` without any per-cell
-    window: range exchange + local rank + per-cell prefix-sum of partition
-    counts (the ``indexing.dense_index`` shape, per live cell)."""
-    ranged = cur.repartitionByRange(parts, "tile_id", F.col(axis), "image_id")
-    local = (
-        ranged.withColumn("_pid", F.spark_partition_id())
-        .withColumn(
-            "_lrn",
-            F.row_number().over(
-                Window.partitionBy("_pid", "tile_id")
-                .orderBy(F.col(axis).asc(), F.col("image_id").asc())
-            ),
-        )
-    )
-    # `local` feeds three consumers (rank rows, counts/offsets, totals). The
-    # range exchange samples its bounds per physical execution, so if the
-    # optimizer does NOT unify the three subtrees into one ReusedExchange,
-    # each consumer can see a DIFFERENT partitioning and the _pid values no
-    # longer line up across the joins (observed: ~1% wrong ranks at 3k rows).
-    # Materialize once so every consumer reads the same partitioning.
-    local = local.localCheckpoint(eager=True)
-    counts = local.groupBy("_pid", "tile_id").agg(F.count(F.lit(1)).alias("_cnt"))
-    # exclusive prefix sum within each cell over partition ids: P x C rows,
-    # triangular join (same rationale as indexing.dense_index — tiny, lazy,
-    # never a single-partition window)
-    b = counts.select(
-        F.col("_pid").alias("_bpid"),
-        F.col("tile_id").alias("_btid"),
-        F.col("_cnt").alias("_bcnt"),
-    )
-    offsets = (
-        counts.alias("a")
-        .join(
-            b,
-            (F.col("_btid") == F.col("a.tile_id"))
-            & (F.col("_bpid") < F.col("a._pid")),
-            "left",
-        )
-        .groupBy("a._pid", "a.tile_id")
-        .agg(F.coalesce(F.sum("_bcnt"), F.lit(0)).alias("_ofs"))
-        .select(
-            F.col("a._pid").alias("_pid"),
-            F.col("a.tile_id").alias("tile_id"),
-            "_ofs",
-        )
-    )
+    window: ``indexing.range_rank`` grouped by cell, plus the cell totals
+    summed from its per-(partition, cell) counts."""
+    ranked, counts = range_rank(cur, [axis, "image_id"], ("tile_id",))
     totals = counts.groupBy("tile_id").agg(F.sum("_cnt").alias("_n"))
-    return (
-        local.join(F.broadcast(offsets), ["_pid", "tile_id"])
-        .join(F.broadcast(totals), "tile_id")
-        .withColumn("_rn", F.col("_ofs") + F.col("_lrn"))
-        .drop("_pid", "_lrn", "_ofs")
-    )
+    return ranked.join(F.broadcast(totals), "tile_id")
 
 
 def _window_step(cur: DataFrame, axis: str) -> DataFrame:

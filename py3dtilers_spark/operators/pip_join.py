@@ -5,9 +5,10 @@ each feature's centroid is tested against the polygon list IN ORDER and the
 first containing polygon wins; features in no polygon become singleton
 groups. The reference is an O(N*P) per-row shapely loop; here it becomes:
 
-  1. cell prefilter — polygons are covered by grid cells of their bbox and
-     broadcast; features compute their cell with pure column math; an
-     equi-join on cell reduces candidate pairs from N*P to ~N.
+  1. cell prefilter — polygons are covered by the Morton cells of their
+     bbox and broadcast; features compute their cell key with one
+     Arrow-batched UDF; an equi-join on cell reduces candidate pairs from
+     N*P to ~N.
   2. exact test — vectorized numpy ray-cast inside an Arrow-batched pandas
      UDF over the surviving pairs (rectangles short-circuit to a pure-SQL
      range predicate, no UDF at all).
@@ -23,17 +24,10 @@ are handled upstream by AQE skew splitting on the cell equi-join.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..functions.spatial import (
-    grid_cell,
-    morton_key,
-    points_in_polygon,
-    ring_bbox_cells,
-    ring_bbox_cells_morton,
-)
+from ..functions.spatial import morton_key, points_in_polygon, ring_bbox_cells_morton
 
 
 def pip_assign_rect(
@@ -66,34 +60,27 @@ def pip_assign_rings(
     features: DataFrame,
     rings: list[np.ndarray],
     cell_size: float = 1250.0,
-    key_scheme: str = "morton",
 ) -> DataFrame:
     """General-polygon path: cell-cover prefilter + exact ray-cast verify.
 
     rings: list of (M, 2) numpy exterior rings, index = polygon_id (order =
     first-match priority). Returns (image_id, polygon_id nullable).
 
-    key_scheme "morton" (default) keys the prefilter equi-join with the
-    batched Z-order cell encoding (functions/spatial.morton_key — the
-    north rule's H3/S2-style index); "grid" uses the flat codegen-only cell.
-    At scale the cover side is a broadcast dim either way; features never
-    shuffle, and skewed (dense-urban) cells split under AQE on the equi-join.
+    The prefilter equi-join is keyed by the batched Z-order cell encoding
+    (functions/spatial.morton_key — the north rule's H3/S2-style index).
+    At scale the cover side is a broadcast dim; features never shuffle,
+    and skewed (dense-urban) cells split under AQE on the equi-join.
     """
     spark = features.sparkSession
-    cover_fn = ring_bbox_cells_morton if key_scheme == "morton" else ring_bbox_cells
     cover_rows = [
         (int(pid), int(cell))
         for pid, ring in enumerate(rings)
-        for cell in cover_fn(ring, cell_size)
+        for cell in ring_bbox_cells_morton(ring, cell_size)
     ]
     cover = spark.createDataFrame(cover_rows, "polygon_id int, cell bigint")
     ring_bc = spark.sparkContext.broadcast([r.tolist() for r in rings])
 
-    key = (
-        morton_key(F.col("x"), F.col("y"), cell_size)
-        if key_scheme == "morton"
-        else grid_cell(F.col("x"), F.col("y"), cell_size)
-    )
+    key = morton_key(F.col("x"), F.col("y"), cell_size)
     cand = (
         features.select("image_id", "x", "y", key.alias("cell"))
         .join(F.broadcast(cover), "cell")

@@ -2,9 +2,8 @@
 tileset_creation.py:57-95).
 
 - affine CRS change: the oracle-checkable path (pure column math). The
-  reference's pyproj reprojection (feature.py:298-312) slots into the same
-  seam as a vectorized pandas UDF (pyproj.Transformer accepts numpy arrays);
-  gated on import since pyproj is absent in this container.
+  reference's geodetic pyproj reprojection (feature.py:298-312) is not
+  implemented: pyproj is not a dependency of this package.
 - per-tile recentering (P6, tileset_creation.py:57-95): subtract the tile
   centroid, keep the offset as the tile transform. Centroids through exact
   integer sums so the op is deterministic under any aggregation order.
@@ -13,13 +12,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-try:  # the real P2 path when pyproj exists (not in this sandbox)
-    import pyproj  # noqa: F401
-
-    HAVE_PYPROJ = True
-except ImportError:
-    HAVE_PYPROJ = False
 
 
 def affine_crs(df: DataFrame, a: float, b: float, tx: float, c: float, d: float, ty: float) -> DataFrame:
@@ -30,31 +22,6 @@ def affine_crs(df: DataFrame, a: float, b: float, tx: float, c: float, d: float,
             "y_out": F.col("x") * c + F.col("y") * d + F.lit(ty),
         }
     )
-
-
-def reproject_pyproj(df: DataFrame, src_epsg: int, dst_epsg: int) -> DataFrame:
-    """pyproj-backed reprojection (vectorized pandas UDF). Raises if pyproj
-    is unavailable — the affine path above is the sandbox fallback."""
-    if not HAVE_PYPROJ:
-        raise NotImplementedError(
-            "pyproj not available in this environment; use affine_crs"
-        )
-    import pandas as pd
-    from pyspark.sql.types import DoubleType
-    from pyproj import Transformer
-
-    tr = Transformer.from_crs(src_epsg, dst_epsg, always_xy=True)
-
-    @F.pandas_udf("struct<x_out: double, y_out: double>")
-    def _re(x: pd.Series, y: pd.Series) -> pd.DataFrame:
-        xo, yo = tr.transform(x.to_numpy(), y.to_numpy())
-        return pd.DataFrame({"x_out": xo, "y_out": yo})
-
-    _ = DoubleType  # keep import local & explicit
-    out = df.withColumn("_p", _re(F.col("x"), F.col("y")))
-    return out.withColumns(
-        {"x_out": F.col("_p.x_out"), "y_out": F.col("_p.y_out")}
-    ).drop("_p")
 
 
 def recenter_per_tile(df: DataFrame, tile_col: str = "tile_id") -> DataFrame:

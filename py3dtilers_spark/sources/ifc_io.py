@@ -29,12 +29,17 @@ Entity ids are read only through ``_ref`` (one id), ``_ref_list`` (a
 ``try_cast`` to bigint: a missing or malformed reference (``$`` where an
 id is required, an empty or absent list, a truncated line) becomes null
 and drops its row at the next equi-join instead of failing the whole scan
-under ANSI mode. Numeric slots (depths, radii, coordinates) keep strict
-casts.
+under ANSI mode. Numeric slots (coordinates, depths, profile dims, angles,
+radii, scales) are read through ``_num``, which ``try_cast``s to double:
+a required number that is missing or malformed drops its point, profile
+or solid, and an optional one (InnerRadius, Scale) stays null. Vertex
+lists (polylines, poly loops, indexed faces) resolve through
+``_join_all``: a vertex that does not resolve, dangling or dropped, drops
+its whole curve or solid instead of reshaping it.
 """
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 _ENTITY_RE = r"^#(\d+)\s*=\s*([A-Z0-9]+)\s*\((.*)\);\s*$"
@@ -54,6 +59,12 @@ def _ref(pattern: str, src: str = "args") -> Column:
     return F.regexp_extract(src, pattern, 1).try_cast("bigint")
 
 
+def _num(pattern: str, src: str = "args") -> Column:
+    """Group 1 of `pattern` over `src` as a double; null when the number
+    is missing or malformed."""
+    return F.regexp_extract(src, pattern, 1).try_cast("double")
+
+
 def _ref_list(pattern: str = r"\(([^()]*)\)\s*$") -> Column:
     """The ``(#a,#b,...)`` list whose inside is group 1 of `pattern` (by
     default the row's trailing list) as array<bigint> in STEP order; empty
@@ -71,6 +82,20 @@ def _slot(k: int, item: str = r"#(\d+)") -> str:
     """Pattern for `item` in the k-th (0-based) slot of a flat,
     comma-separated argument list such as IfcAxis2Placement3D's."""
     return rf"^(?:[^,]*,){{{k}}}\s*{item}"
+
+
+def _join_all(lists: DataFrame, points: DataFrame, on, key: str) -> DataFrame:
+    """``lists.join(points, on)`` keeping only the `key` groups whose every
+    row found its point: a dangling vertex reference drops its whole curve
+    or solid instead of silently reshaping it."""
+    w = Window.partitionBy(key)
+    return (
+        lists.withColumn("_n", F.count(F.lit(1)).over(w))
+        .join(points, on)
+        .withColumn("_k", F.count(F.lit(1)).over(w))
+        .where("_k = _n")
+        .drop("_n", "_k")
+    )
 
 
 # IfcProduct subtypes the reference tiler iterates (ifcObjectGeom.py:200-214)
@@ -97,19 +122,28 @@ def ifc_class_counts(entities: DataFrame) -> DataFrame:
     return entities.groupBy("ifc_class").agg(F.count(F.lit(1)).alias("n"))
 
 
+def _coords(rows: DataFrame, keys: list[str], z_default=None) -> DataFrame:
+    """`keys` + (x, y, z) doubles read from the 'x,y[,z]' string column
+    ``c``. z takes `z_default`, when given, if the third slot is absent; a
+    missing or malformed coordinate drops the row."""
+    z = _num(_slot(2, r"([^,]*)"), "c")
+    if z_default is not None:
+        z = F.when(F.col("c").rlike(_slot(2, "")), z).otherwise(F.lit(z_default))
+    return rows.select(
+        *keys,
+        _num(_slot(0, r"([^,]*)"), "c").alias("x"),
+        _num(_slot(1, r"([^,]*)"), "c").alias("y"),
+        z.alias("z"),
+    ).dropna(subset=["x", "y", "z"])
+
+
 def _xyz(entities: DataFrame, ifc_class: str) -> DataFrame:
     """`ifc_class` args '(x,y[,z])' -> (entity_id, x, y, z). Pure column
-    math (split + cast); z defaults to 0 for 2-D rows."""
+    math; z defaults to 0 for 2-D rows."""
     rows = entities.where(F.col("ifc_class") == ifc_class).select(
-        "entity_id",
-        F.split(F.regexp_replace("args", r"[()\s]", ""), ",").alias("c"),
+        "entity_id", F.regexp_replace("args", r"[()\s]", "").alias("c"),
     )
-    return rows.select(
-        "entity_id",
-        F.element_at("c", 1).cast("double").alias("x"),
-        F.element_at("c", 2).cast("double").alias("y"),
-        F.coalesce(F.try_element_at("c", F.lit(3)).cast("double"), F.lit(0.0)).alias("z"),
-    )
+    return _coords(rows, ["entity_id"], z_default=0.0)
 
 
 def ifc_cartesian_points(entities: DataFrame) -> DataFrame:
@@ -135,33 +169,30 @@ def _axis2_placements(entities: DataFrame) -> DataFrame:
 
 def _polyline_points(entities: DataFrame) -> DataFrame:
     """IFCPOLYLINE vertices -> (curve_id, pos, x, y, z); posexplode keeps
-    STEP argument order."""
+    STEP argument order. A polyline with an unresolved vertex drops."""
     polys = entities.where(F.col("ifc_class") == "IFCPOLYLINE").select(
         F.col("entity_id").alias("curve_id"),
         F.posexplode(_ref_list(r"\(([^()]*)\)")).alias("pos", "pt_id"),
     )
     pts = ifc_cartesian_points(entities).withColumnRenamed("entity_id", "pt_id")
-    return polys.join(pts, "pt_id").select("curve_id", "pos", "x", "y", "z")
+    return _join_all(polys, pts, "pt_id", "curve_id").select(
+        "curve_id", "pos", "x", "y", "z"
+    )
 
 
 def _point_lists(entities: DataFrame) -> DataFrame:
     """IFCCARTESIANPOINTLIST3D rows -> (coord_id, vpos, x, y, z), vpos the
-    0-based position of the '(x,y,z)' triple in the list."""
-    return entities.where(
+    0-based position of the '(x,y,z)' triple in the list; a triple with a
+    missing or malformed coordinate drops."""
+    rows = entities.where(
         F.col("ifc_class") == "IFCCARTESIANPOINTLIST3D"
     ).select(
         F.col("entity_id").alias("coord_id"),
         F.posexplode(
             F.expr(r"regexp_extract_all(args, '\\(([^()]+)\\)', 1)")
-        ).alias("vpos", "xyz_s"),
-    ).select(
-        "coord_id", "vpos", F.split("xyz_s", ",").alias("c"),
-    ).select(
-        "coord_id", "vpos",
-        F.element_at("c", 1).cast("double").alias("x"),
-        F.element_at("c", 2).cast("double").alias("y"),
-        F.element_at("c", 3).cast("double").alias("z"),
+        ).alias("vpos", "c"),
     )
+    return _coords(rows, ["coord_id", "vpos"])
 
 
 def ifc_products(entities: DataFrame) -> DataFrame:
@@ -215,8 +246,8 @@ def ifc_swept_solids(entities: DataFrame) -> DataFrame:
     return entities.where(F.col("ifc_class") == "IFCEXTRUDEDAREASOLID").select(
         F.col("entity_id").alias("solid_id"),
         _ref(r"^#(\d+)").alias("profile_id"),
-        F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("depth"),
-    )
+        _num(_NUM_RE).alias("depth"),
+    ).dropna(subset=["depth"])
 
 
 def ifc_product_solids(entities: DataFrame) -> DataFrame:
@@ -274,15 +305,12 @@ def ifc_product_meshes(entities: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
-        from ..operators.geometry import prism_extrude, prism_extrude_with_holes
+        from ..operators.geometry import prism_extrude
 
-        depth = float(pdf["depth"].iloc[0])
-        ring = _profile_ring_np(pdf)
-        holes = _profile_holes_np(pdf)
-        if holes:
-            tris = prism_extrude_with_holes(ring, holes, 0.0, depth)
-        else:
-            tris = prism_extrude(ring, 0.0, depth)
+        tris = prism_extrude(
+            _profile_ring_np(pdf), 0.0, float(pdf["depth"].iloc[0]),
+            _profile_holes_np(pdf),
+        )
         return pd.DataFrame([_mesh_row(int(pdf["solid_id"].iloc[0]), tris)])
 
     meshes = per_solid.groupBy("solid_id").applyInPandas(eval_solid, _MESH_SCHEMA)
@@ -400,10 +428,8 @@ def _profile_rings(entities: DataFrame):
         "profile_id",
         F.lit("rect").alias("ptype"),
         F.lit(None).cast("bigint").alias("curve_id"),
-        F.regexp_extract("args", r"([0-9][0-9.Ee+\-]*)\s*,\s*[0-9][0-9.Ee+\-]*\s*$", 1)
-        .cast("double")
-        .alias("xdim"),
-        F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("ydim"),
+        _num(r"([0-9][0-9.Ee+\-]*)\s*,\s*[0-9][0-9.Ee+\-]*\s*$").alias("xdim"),
+        _num(_NUM_RE).alias("ydim"),
     )
     # curved profiles (columns / pipes): tessellated to a regular
     # _CIRCLE_SEGMENTS-gon, the polyhedral stand-in for ifcopenshell's
@@ -413,7 +439,7 @@ def _profile_rings(entities: DataFrame):
         "profile_id",
         F.lit("circle").alias("ptype"),
         F.lit(None).cast("bigint").alias("curve_id"),
-        F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("xdim"),
+        _num(_NUM_RE).alias("xdim"),
         F.lit(0.0).alias("ydim"),
     )
     hollow = profiles.where(
@@ -422,14 +448,18 @@ def _profile_rings(entities: DataFrame):
         "profile_id",
         F.lit("circhollow").alias("ptype"),
         F.lit(None).cast("bigint").alias("curve_id"),
-        F.regexp_extract("args", r"([0-9][0-9.Ee+\-]*)\s*,\s*[0-9][0-9.Ee+\-]*\s*$", 1)
-        .cast("double")
-        .alias("xdim"),
-        F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("ydim"),
+        _num(r"([0-9][0-9.Ee+\-]*)\s*,\s*[0-9][0-9.Ee+\-]*\s*$").alias("xdim"),
+        _num(_NUM_RE).alias("ydim"),
     )
-    prof = arb.unionByName(rect).unionByName(circ).unionByName(hollow)
     ring_rows = _polyline_points(entities).selectExpr(
         "curve_id", "pos", "x AS px", "y AS py"
+    )
+    # a ring profile whose curve did not resolve drops, and its solid
+    # with it at the evaluators' inner join
+    arb = arb.join(ring_rows.select("curve_id").distinct(), "curve_id", "left_semi")
+    prof = (
+        arb.unionByName(rect).unionByName(circ).unionByName(hollow)
+        .dropna(subset=["xdim", "ydim"])
     )
     return prof, ring_rows
 
@@ -451,15 +481,11 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
     sds = entities.where(F.col("ifc_class") == "IFCSWEPTDISKSOLID").select(
         F.col("entity_id").alias("solid_id"),
         _ref(r"^#(\d+)").alias("curve_id"),
-        F.regexp_extract("args", r"#\d+\s*,\s*([0-9][0-9.Ee+\-]*)", 1)
-        .cast("double")
-        .alias("radius"),
+        _num(r"#\d+\s*,\s*([0-9][0-9.Ee+\-]*)").alias("radius"),
         # InnerRadius when numeric; '$' leaves the extract empty -> null
-        F.regexp_extract(
-            "args", r"#\d+\s*,\s*[0-9][0-9.Ee+\-]*\s*,\s*([0-9][0-9.Ee+\-]*)", 1
-        )
-        .cast("double")
-        .alias("inner_radius"),
+        _num(
+            r"#\d+\s*,\s*[0-9][0-9.Ee+\-]*\s*,\s*([0-9][0-9.Ee+\-]*)"
+        ).alias("inner_radius"),
         # StartParam / EndParam (4th/5th args): a NUMERIC value means a
         # TRIMMED sweep, which this subset does not evaluate — such solids
         # are dropped below (consistent with the subset policy of omitting
@@ -471,6 +497,7 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
         F.trim(F.try_element_at(F.split("args", ","), F.lit(5))).alias("_p_end"),
     ).where(
         F.col("_p_end").isNotNull()
+        & F.col("radius").isNotNull()
         & ~F.col("_p_start").rlike(r"^[0-9.+\-]")
         & ~F.col("_p_end").rlike(r"^[0-9.+\-]")
     ).drop("_p_start", "_p_end")
@@ -505,9 +532,9 @@ def ifc_revolved_solids(entities: DataFrame) -> DataFrame:
     rev = entities.where(F.col("ifc_class") == "IFCREVOLVEDAREASOLID").select(
         F.col("entity_id").alias("solid_id"),
         _ref(r"^#(\d+)").alias("profile_id"),
-        F.regexp_extract("args", _NUM_RE, 1).cast("double").alias("angle"),
+        _num(_NUM_RE).alias("angle"),
         F.explode(_all_refs()).alias("axis_id"),
-    )
+    ).dropna(subset=["angle"])
     axis1 = entities.where(F.col("ifc_class") == "IFCAXIS1PLACEMENT").select(
         F.col("entity_id").alias("axis_id"),
         _ref(r"^#(\d+)").alias("loc_id"),
@@ -630,13 +657,9 @@ def ifc_pfs_meshes(entities: DataFrame) -> DataFrame:
         (F.col("vpos") + 1).alias("vidx"),  # STEP indices are 1-based
         "x", "y", "z",
     )
-    rows = (
-        pfs.join(face_loops, "face_id")
-        .join(coords, ["coord_id", "vidx"])
-        .select(
-            "solid_id", "face_id", "bound_id", "is_outer", "pos", "x", "y", "z"
-        )
-    )
+    rows = _join_all(
+        pfs.join(face_loops, "face_id"), coords, ["coord_id", "vidx"], "solid_id"
+    ).select("solid_id", "face_id", "bound_id", "is_outer", "pos", "x", "y", "z")
     return rows.groupBy("solid_id").applyInPandas(
         _eval_planar_faces, _MESH_SCHEMA
     )
@@ -743,9 +766,7 @@ def ifc_mapped_meshes(entities: DataFrame, base_meshes: DataFrame) -> DataFrame:
         _ref(_slot(0)).alias("ax1_id"),
         _ref(_slot(1)).alias("ax2_id"),
         _ref(_slot(2)).alias("org_id"),
-        F.regexp_extract("args", _slot(3, r"([^,\s]*)"), 1)
-        .try_cast("double")
-        .alias("scale"),
+        _num(_slot(3, r"([^,\s]*)")).alias("scale"),
         _ref(_slot(4)).alias("ax3_id"),
     )
     dirs = _directions(entities)
@@ -947,13 +968,14 @@ def ifc_brep_meshes(entities: DataFrame) -> DataFrame:
     )
     pts = ifc_cartesian_points(entities).selectExpr("entity_id AS pt_id", "x", "y", "z")
 
-    rows = (
+    walk = (
         breps.join(shells, "shell_id")
         .join(faces, "face_id")
         .join(bounds, "bound_id")
         .join(loops, "loop_id")
-        .join(pts, "pt_id")
-        .select("solid_id", "face_id", "bound_id", "is_outer", "pos", "x", "y", "z")
+    )
+    rows = _join_all(walk, pts, "pt_id", "solid_id").select(
+        "solid_id", "face_id", "bound_id", "is_outer", "pos", "x", "y", "z"
     )
     return rows.groupBy("solid_id").applyInPandas(_eval_planar_faces, _MESH_SCHEMA)
 

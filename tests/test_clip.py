@@ -166,15 +166,13 @@ def test_clip_annulus_cap():
 def test_prism_extrude_with_holes_closed():
     """Hollow extrusion (IfcCircleHollowProfileDef pipes): annulus caps +
     inner walls facing the bore -> closed mesh with the annulus volume."""
-    from py3dtilers_spark.operators.geometry import prism_extrude_with_holes
-
     out_r = np.array([[-2.0, -2.0], [2.0, -2.0], [2.0, 2.0], [-2.0, 2.0]])
     in_r = np.array([[-1.0, -1.0], [1.0, -1.0], [1.0, 1.0], [-1.0, 1.0]])
-    tube = prism_extrude_with_holes(out_r, [in_r], 0.0, 3.0)
+    tube = prism_extrude(out_r, 0.0, 3.0, [in_r])
     assert mesh_volume6(tube) == pytest.approx(6.0 * (16.0 - 4.0) * 3.0)
     _, dbl = triangle_normals(tube)
     # outer walls 16*3 + inner walls 8*3 + two annuli 2*12
     assert dbl.sum() / 2.0 == pytest.approx(48.0 + 24.0 + 24.0)
     # CW-specified hole must behave identically (winding normalized)
-    tube2 = prism_extrude_with_holes(out_r, [in_r[::-1]], 0.0, 3.0)
+    tube2 = prism_extrude(out_r, 0.0, 3.0, [in_r[::-1]])
     assert mesh_volume6(tube2) == pytest.approx(6.0 * 12.0 * 3.0)

@@ -910,6 +910,27 @@ def test_ifc_swept_disk_truncated_line_is_dropped(spark, tmp_path):
     assert [r["solid_id"] for r in rows] == [59]
 
 
+def test_ifc_swept_disk_without_bore(spark, tmp_path):
+    """An unset ($) InnerRadius is an optional number: the pipe is swept
+    solid, with no bore, instead of failing the scan under ANSI mode."""
+    import numpy as np
+
+    from py3dtilers_spark.operators.geometry import mesh_volume6
+    from py3dtilers_spark.sources.ifc_io import ifc_entities, ifc_sds_meshes
+
+    p = tmp_path / "sds_no_bore.ifc"
+    p.write_text(IFC_SDS_TEXT.replace(
+        "#59= IFCSWEPTDISKSOLID(#56,0.2,0.1,$,$);",
+        "#59= IFCSWEPTDISKSOLID(#56,0.2,$,$,$);",
+    ))
+    rows = ifc_sds_meshes(ifc_entities(spark, str(p))).collect()
+    assert [r["solid_id"] for r in rows] == [59]
+    tris = np.frombuffer(bytes(rows[0]["tris"]), dtype=np.float32).reshape(-1, 3, 3)
+    a = 8.0 * np.sin(2.0 * np.pi / 16)
+    vol = mesh_volume6(tris.astype(np.float64)) / 6.0
+    assert abs(vol - a * 0.2 ** 2 * 5.0) < 1e-3
+
+
 def test_mesh_row_empty_mesh():
     """A mesh with no triangles (a clip that removed everything) is a valid
     row: no surface, a zero bbox and an empty soup."""
@@ -963,4 +984,48 @@ def test_ifc_ids_have_no_strict_cast():
     assert not re.search(r"\bAS\s+bigint\b", src, re.IGNORECASE)
     casts = [m.start() for m in re.finditer(r"""\.cast\(\s*["']bigint["']\s*\)""", src)]
     assert casts  # the typed null literals are still there
+    assert all(src[:i].endswith("F.lit(None)") for i in casts)
+
+
+@pytest.mark.parametrize(
+    "old,new",
+    [
+        ("#54= IFCCARTESIANPOINT((1.,3.));", "#54= IFCCARTESIANPOINT((1.,));"),
+        (
+            "#59= IFCEXTRUDEDAREASOLID(#57,$,#58,5.);",
+            "#59= IFCEXTRUDEDAREASOLID(#57,$,#58,$);",
+        ),
+        (
+            "#56= IFCPOLYLINE((#50,#51,#52,#53,#54,#55,#50));",
+            "#56= IFCPOLYLINE((#50,#51,#52,#53,#99,#55,#50));",
+        ),
+    ],
+    ids=["point_without_y", "depth_unset", "dangling_vertex"],
+)
+def test_ifc_malformed_wall_solid_drops(spark, tmp_path, old, new):
+    """A malformed number or an unresolved vertex in WALL_G's extrusion
+    drops that solid: the scan neither fails under ANSI mode nor returns a
+    reshaped wall, and SLAB_G is unchanged."""
+    from py3dtilers_spark.sources.ifc_io import ifc_product_meshes
+
+    assert old in IFC_GEOM_TEXT
+    p = tmp_path / "malformed.ifc"
+    p.write_text(IFC_GEOM_TEXT.replace(old, new))
+    rows = ifc_product_meshes(ifc_entities(spark, str(p))).collect()
+    assert [(r["global_id"], r["n_tri"], r["surface2"]) for r in rows] == [
+        ("SLAB_G", 12, 104)
+    ]
+
+
+def test_ifc_numbers_have_no_strict_cast():
+    """Every number in the IFC scan is read through try_cast: a strict
+    double cast appears only on a typed null literal."""
+    import re
+
+    from py3dtilers_spark.sources import ifc_io
+
+    with open(ifc_io.__file__) as fh:
+        src = fh.read()
+    assert not re.search(r"\bAS\s+double\b", src, re.IGNORECASE)
+    casts = [m.start() for m in re.finditer(r"""\.cast\(\s*["']double["']\s*\)""", src)]
     assert all(src[:i].endswith("F.lit(None)") for i in casts)

@@ -1,8 +1,9 @@
-"""dense_index regression tests.
+"""dense_index and range_rank regression tests.
 
-The range-exchange-reuse hazard (see operators/indexing.py comment and
-kd_rank._rank_step): `local` = repartitionByRange + spark_partition_id
-feeds TWO consumers (counts->offsets and the final join). If the physical
+The range-exchange-reuse hazard (see the operators/indexing.py range_rank
+comment; kd_rank._rank_step ranks through the same range_rank): `local` =
+repartitionByRange + spark_partition_id feeds several consumers
+(counts->offsets and the final join). If the physical
 exchange is not reused, each consumer re-samples the range bounds and the
 _pid values disagree across the join -> silently wrong dense ids. Small
 inputs mask it (everything lands in one partition), so these tests use a
@@ -12,7 +13,7 @@ the sorted oracle exactly.
 import numpy as np
 import pytest
 
-from py3dtilers_spark.operators.indexing import dense_index
+from py3dtilers_spark.operators.indexing import dense_index, range_rank
 
 
 @pytest.fixture
@@ -51,3 +52,31 @@ def test_dense_index_base_and_repeat_runs(spark, parts32):
     want = {k: i + 1 for i, k in enumerate(sorted(keys))}
     assert a == want
     assert b == want
+
+
+def test_range_rank_grouped_matches_sorted_oracle(spark, parts32):
+    """Grouped rank, the kd level shape: five groups that each span several
+    range partitions, heavy ties in the first order key (broken by the
+    unique second key), ranks 1-based within each group."""
+    rng = np.random.default_rng(41)
+    n = 6000
+    ids = [f"id{v:05d}" for v in rng.permutation(n)]
+    rows = [
+        (f"g{g}", int(a), i)
+        for g, a, i in zip(rng.integers(0, 5, n), rng.integers(0, 40, n), ids)
+    ]
+    df = spark.createDataFrame(rows, ["g", "a", "id"])
+    ranked, counts = range_rank(df, ["a", "id"], ("g",))
+    assert sorted(ranked.columns) == ["_rn", "a", "g", "id"]
+    got = {r["id"]: r["_rn"] for r in ranked.collect()}
+    want = {}
+    for g in {r[0] for r in rows}:
+        members = sorted((a, i) for gg, a, i in rows if gg == g)
+        want.update({i: k + 1 for k, (_, i) in enumerate(members)})
+    assert got == want
+    spans = {}
+    for r in counts.collect():
+        spans.setdefault(r["g"], []).append(r["_cnt"])
+    assert len(spans) == 5
+    assert all(len(c) > 1 for c in spans.values())
+    assert sum(sum(c) for c in spans.values()) == n
