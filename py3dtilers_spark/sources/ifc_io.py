@@ -32,10 +32,15 @@ and drops its row at the next equi-join instead of failing the whole scan
 under ANSI mode. Numeric slots (coordinates, depths, profile dims, angles,
 radii, scales) are read through ``_num``, which ``try_cast``s to double:
 a required number that is missing or malformed drops its point, profile
-or solid, and an optional one (InnerRadius, Scale) stays null. Vertex
-lists (polylines, poly loops, indexed faces) resolve through
-``_join_all``: a vertex that does not resolve, dangling or dropped, drops
-its whole curve or solid instead of reshaping it.
+or solid, and an optional one (InnerRadius, Scale) reads null when unset
+(``$``) and drops its solid when malformed. Vertex lists (polylines,
+poly loops, indexed faces, triangulated point lists) must resolve whole:
+a vertex that does not resolve, dangling or dropped, drops its curve or
+solid instead of reshaping it (``_join_all``). Optional references
+(Axis, RefDirection, operator axes, the mapping origin) go through
+``_join_opt``: an unset one takes the schema default, a set one that
+does not resolve drops its solid, clip or placement, and a product whose
+placement drops drops with it.
 """
 from __future__ import annotations
 
@@ -65,6 +70,14 @@ def _num(pattern: str, src: str = "args") -> Column:
     return F.regexp_extract(src, pattern, 1).try_cast("double")
 
 
+def _opt_num_ok(pattern: str) -> Column:
+    """False when the optional number in group 1 of `pattern` over
+    ``args`` is set (not ``$``) but malformed: such a row drops instead of
+    taking the slot's default."""
+    raw = F.regexp_extract("args", pattern, 1)
+    return (raw == "$") | raw.try_cast("double").isNotNull()
+
+
 def _ref_list(pattern: str = r"\(([^()]*)\)\s*$") -> Column:
     """The ``(#a,#b,...)`` list whose inside is group 1 of `pattern` (by
     default the row's trailing list) as array<bigint> in STEP order; empty
@@ -88,13 +101,24 @@ def _join_all(lists: DataFrame, points: DataFrame, on, key: str) -> DataFrame:
     """``lists.join(points, on)`` keeping only the `key` groups whose every
     row found its point: a dangling vertex reference drops its whole curve
     or solid instead of silently reshaping it."""
-    w = Window.partitionBy(key)
+    miss = F.bool_or(F.col("_hit").isNull()).over(Window.partitionBy(key))
     return (
-        lists.withColumn("_n", F.count(F.lit(1)).over(w))
-        .join(points, on)
-        .withColumn("_k", F.count(F.lit(1)).over(w))
-        .where("_k = _n")
-        .drop("_n", "_k")
+        lists.join(points.withColumn("_hit", F.lit(True)), on, "left")
+        .withColumn("_miss", miss)
+        .where(~F.col("_miss"))
+        .drop("_hit", "_miss")
+    )
+
+
+def _join_opt(rows: DataFrame, table: DataFrame, on: str) -> DataFrame:
+    """``rows.join(table, on, "left")`` over an optional reference into a
+    small lookup `table`: an unset (null) `on` keeps its row for the
+    caller's default, while a set one that does not resolve (dangling, or
+    its target dropped as malformed) drops the row."""
+    return (
+        rows.join(F.broadcast(table.withColumn("_hit", F.lit(True))), on, "left")
+        .where(F.col(on).isNull() | F.col("_hit").isNotNull())
+        .drop("_hit")
     )
 
 
@@ -478,14 +502,15 @@ def ifc_sds_meshes(entities: DataFrame, segments: int = 16) -> DataFrame:
     table."""
     import pandas as pd
 
-    sds = entities.where(F.col("ifc_class") == "IFCSWEPTDISKSOLID").select(
+    inner = _slot(2, r"([^,\s]*)")
+    sds = entities.where(
+        (F.col("ifc_class") == "IFCSWEPTDISKSOLID") & _opt_num_ok(inner)
+    ).select(
         F.col("entity_id").alias("solid_id"),
         _ref(r"^#(\d+)").alias("curve_id"),
         _num(r"#\d+\s*,\s*([0-9][0-9.Ee+\-]*)").alias("radius"),
-        # InnerRadius when numeric; '$' leaves the extract empty -> null
-        _num(
-            r"#\d+\s*,\s*[0-9][0-9.Ee+\-]*\s*,\s*([0-9][0-9.Ee+\-]*)"
-        ).alias("inner_radius"),
+        # InnerRadius: '$' reads null (no bore)
+        _num(inner).alias("inner_radius"),
         # StartParam / EndParam (4th/5th args): a NUMERIC value means a
         # TRIMMED sweep, which this subset does not evaluate — such solids
         # are dropped below (consistent with the subset policy of omitting
@@ -566,7 +591,7 @@ def ifc_revolved_meshes(entities: DataFrame, segments: int = 32) -> DataFrame:
     per_solid = (
         solids.join(F.broadcast(prof), "profile_id")
         .join(F.broadcast(locs), "loc_id")
-        .join(F.broadcast(dirs), "dir_id", "left")
+        .transform(_join_opt, dirs, "dir_id")
         .join(ring_rows, "curve_id", "left")
         .select(
             "solid_id", "angle", "aox", "aoy", "adx", "ady",
@@ -702,18 +727,26 @@ def ifc_tfs_meshes(entities: DataFrame) -> DataFrame:
         import numpy as np
         import pandas as pd
 
+        none = pd.DataFrame(
+            columns=[
+                "solid_id", "n_tri", "surface2", "xmin", "xmax",
+                "ymin", "ymax", "zmin", "zmax", "tris",
+            ]
+        )
         if len(vpdf) == 0 or len(fpdf) == 0:
-            return pd.DataFrame(
-                columns=[
-                    "solid_id", "n_tri", "surface2", "xmin", "xmax",
-                    "ymin", "ymax", "zmin", "zmax", "tris",
-                ]
-            )
-        v = vpdf.sort_values("vpos")[["vx", "vy", "vz"]].to_numpy(np.float64)
+            return none
+        vpdf = vpdf.sort_values("vpos")
         idx = np.array(
             [[int(t) for t in s.split(",")] for s in fpdf.sort_values("fpos")["tri_s"]],
             dtype=np.int64,
         )
+        # a dropped (malformed) point would shift every later position:
+        # the solid drops unless the list is whole and every index lands
+        if not np.array_equal(vpdf["vpos"].to_numpy(), np.arange(len(vpdf))) or (
+            idx.min() < 1 or idx.max() > len(vpdf)
+        ):
+            return none
+        v = vpdf[["vx", "vy", "vz"]].to_numpy(np.float64)
         tris = v[idx - 1]  # STEP CoordIndex is 1-based
         return pd.DataFrame([_mesh_row(int(vpdf["solid_id"].iloc[0]), tris)])
 
@@ -758,15 +791,18 @@ def ifc_mapped_meshes(entities: DataFrame, base_meshes: DataFrame) -> DataFrame:
     )
 
     # operator slots: Axis1, Axis2, LocalOrigin, Scale[, Axis3] — every slot
-    # but the origin may be '$' (and slot 5 absent): those read as null
+    # but the origin may be '$' (and slot 5 absent): those read as null and
+    # take their defaults; a set slot that does not resolve drops the item
+    scale = _slot(3, r"([^,\s]*)")
     ops = entities.where(
-        F.col("ifc_class") == "IFCCARTESIANTRANSFORMATIONOPERATOR3D"
+        (F.col("ifc_class") == "IFCCARTESIANTRANSFORMATIONOPERATOR3D")
+        & _opt_num_ok(scale)
     ).select(
         F.col("entity_id").alias("op_id"),
         _ref(_slot(0)).alias("ax1_id"),
         _ref(_slot(1)).alias("ax2_id"),
         _ref(_slot(2)).alias("org_id"),
-        _num(_slot(3, r"([^,\s]*)")).alias("scale"),
+        _num(scale).alias("scale"),
         _ref(_slot(4)).alias("ax3_id"),
     )
     dirs = _directions(entities)
@@ -797,12 +833,12 @@ def ifc_mapped_meshes(entities: DataFrame, base_meshes: DataFrame) -> DataFrame:
     resolved = (
         mapped.join(F.broadcast(repmap), "map_id")
         .join(F.broadcast(ops), "op_id")
-        .join(F.broadcast(d1), "ax1_id", "left")
-        .join(F.broadcast(d2), "ax2_id", "left")
-        .join(F.broadcast(d3), "ax3_id", "left")
+        .transform(_join_opt, d1, "ax1_id")
+        .transform(_join_opt, d2, "ax2_id")
+        .transform(_join_opt, d3, "ax3_id")
         .join(F.broadcast(origins), "org_id")
         .join(F.broadcast(map_plc), "map_plc_id", "left")
-        .join(F.broadcast(map_locs), "map_loc_id", "left")
+        .transform(_join_opt, map_locs, "map_loc_id")
         .select(
             "solid_id", "src_rep_id",
             F.coalesce("scale", F.lit(1.0)).alias("scale"),
@@ -1034,7 +1070,7 @@ def ifc_boolean_clips(entities: DataFrame) -> DataFrame:
         .join(F.broadcast(planes), "surface_id")
         .join(F.broadcast(plc), "placement_id")
         .join(F.broadcast(locs), "loc_id")
-        .join(F.broadcast(dirs), "axis_id", "left")
+        .transform(_join_opt, dirs, "axis_id")
     )
     sign = F.when(F.col("agreement"), F.lit(1.0)).otherwise(F.lit(-1.0))
     return resolved.select(
@@ -1114,18 +1150,12 @@ def _axis2_frames(entities: DataFrame, id_alias: str) -> DataFrame:
     )
     j = (
         plc.join(F.broadcast(locs), "loc_id")
-        .join(
-            F.broadcast(dirs.selectExpr(
-                "entity_id AS axis_id", "x AS azx", "y AS azy", "z AS azz"
-            )),
-            "axis_id", "left",
-        )
-        .join(
-            F.broadcast(dirs.selectExpr(
-                "entity_id AS ref_id", "x AS arx", "y AS ary", "z AS arz"
-            )),
-            "ref_id", "left",
-        )
+        .transform(_join_opt, dirs.selectExpr(
+            "entity_id AS axis_id", "x AS azx", "y AS azy", "z AS azz"
+        ), "axis_id")
+        .transform(_join_opt, dirs.selectExpr(
+            "entity_id AS ref_id", "x AS arx", "y AS ary", "z AS arz"
+        ), "ref_id")
     )
 
     @F.pandas_udf(ArrayType(DoubleType()))
@@ -1179,7 +1209,9 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
     resolution is POINTER JUMPING (the H5/components shape): each round
     composes a node's frame with its current ancestor's and adopts the
     ancestor's parent, so an L-deep chain resolves in ceil(log2 L) joins
-    — never a sequential walk."""
+    — never a sequential walk. A placement whose relative frame does not
+    resolve (a dangling or malformed location or direction), or one of
+    whose ancestors' does not, is left out."""
     import pandas as pd
     from pyspark.sql.types import ArrayType, DoubleType
 
@@ -1191,6 +1223,8 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
     frames = _axis2_frames(entities, "rel_frame_id")
     # frames is the same size class as lp itself — no broadcast hint;
     # AQE picks the strategy from runtime sizes
+    # ok: this placement's relative frame and every ancestor's resolved;
+    # the identity stand-in only keeps the compose arithmetic total
     cur = lp.join(frames, "rel_frame_id", "left").select(
         "plc_id",
         "parent_id",
@@ -1200,6 +1234,7 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
                       (1.0, 0.0, 0.0, 0.0, 1.0, 0.0, 0.0, 0.0, 1.0,
                        0.0, 0.0, 0.0)]),
         ).alias("frame"),
+        F.col("frame").isNotNull().alias("ok"),
     )
 
     # no type hints: PEP-563 stringized annotations (future import above)
@@ -1231,6 +1266,7 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
             "plc_id AS parent_id",
             "parent_id AS gp_id",
             "frame AS anc_frame",
+            "ok AS anc_ok",
         )
         cur = (
             cur.join(anc, "parent_id", "left")
@@ -1252,10 +1288,11 @@ def ifc_world_placements(entities: DataFrame) -> DataFrame:
                 )
                 .otherwise(F.col("frame"))
                 .alias("frame"),
+                (F.col("ok") & F.coalesce("anc_ok", F.lit(True))).alias("ok"),
             )
             .localCheckpoint(eager=True)  # iterative lineage + frame reuse
         )
-    return cur.select("plc_id", "frame")
+    return cur.where("ok").select("plc_id", "frame")
 
 
 def ifc_product_meshes_world(entities: DataFrame) -> DataFrame:
@@ -1264,17 +1301,27 @@ def ifc_product_meshes_world(entities: DataFrame) -> DataFrame:
     IfcLocalPlacement) is pointer-jump-resolved and applied to the
     evaluated local mesh — the distributed equivalent of the reference's
     USE_WORLD_COORDS create_shape setting (ifcObjectGeom.py:83-87).
-    Products without a placement pass through unmoved."""
+    Products without a placement pass through unmoved; a product whose
+    placement ``ifc_world_placements`` leaves out drops."""
     import pandas as pd
 
-    local = ifc_product_meshes(entities)
-    prod_plc = (
+    world = ifc_world_placements(entities)
+    refs = (
         entities.where(F.col("ifc_class").isin(*PRODUCT_CLASSES))
         .select("entity_id", F.explode(_all_refs()).alias("plc_id"))
-        .join(ifc_world_placements(entities), "plc_id")
-        .select("entity_id", "frame")
     )
-    placed = local.join(prod_plc, "entity_id", "left")
+    # a product whose IfcLocalPlacement did not resolve drops
+    unresolved = refs.join(
+        entities.where(F.col("ifc_class") == "IFCLOCALPLACEMENT")
+        .select(F.col("entity_id").alias("plc_id")),
+        "plc_id",
+    ).join(world, "plc_id", "left_anti")
+    prod_plc = refs.join(world, "plc_id").select("entity_id", "frame")
+    placed = (
+        ifc_product_meshes(entities)
+        .join(unresolved, "entity_id", "left_anti")
+        .join(prod_plc, "entity_id", "left")
+    )
 
     schema = (
         "entity_id bigint, global_id string, ifc_class string, n_tri int,"

@@ -1017,6 +1017,74 @@ def test_ifc_malformed_wall_solid_drops(spark, tmp_path, old, new):
     ]
 
 
+def _product_rows(spark, path, text, world=False):
+    from py3dtilers_spark.sources.ifc_io import (
+        ifc_product_meshes,
+        ifc_product_meshes_world,
+    )
+
+    path.write_text(text)
+    fn = ifc_product_meshes_world if world else ifc_product_meshes
+    return {r["global_id"]: r for r in fn(ifc_entities(spark, str(path))).collect()}
+
+
+# COL_R keeps #82 (Axis #81); BEAM_Q revolves about #83, whose Axis is
+# unset and defaults to the same +y
+_REVOLVE_TWO_AXES = IFC_REVOLVE_TEXT.replace(
+    "#95= IFCREVOLVEDAREASOLID(#57,$,#82,",
+    "#83= IFCAXIS1PLACEMENT(#80,$);\n#95= IFCREVOLVEDAREASOLID(#57,$,#83,",
+)
+
+# PYR_T beside a second, larger pyramid PYR_U on its own point list
+_TFS_TWO_SOLIDS = IFC_TFS_TEXT.replace("ENDSEC;\nEND", "\n".join([
+    "#21= IFCWALL('PYR_U',#1,'W',$,$,$,#47,$);",
+    "#12= IFCCARTESIANPOINTLIST3D(((0.,0.,0.),(2.,0.,0.),(2.,2.,0.),"
+    "(0.,2.,0.),(1.,1.,2.)));",
+    "#13= IFCTRIANGULATEDFACESET(#12,$,.T.,((1,3,2),(1,4,3),(1,2,5),"
+    "(2,3,5),(3,4,5),(4,1,5)),$);",
+    "#46= IFCSHAPEREPRESENTATION($,'Body','Tessellation',(#13));",
+    "#47= IFCPRODUCTDEFINITIONSHAPE($,$,(#46));",
+    "ENDSEC;\nEND",
+]))
+
+
+@pytest.mark.parametrize(
+    "text,old,new,world,kept",
+    [
+        (_TFS_TWO_SOLIDS, "#10= IFCCARTESIANPOINTLIST3D(((0.,0.,0.),(1.,0.,0.),",
+         "#10= IFCCARTESIANPOINTLIST3D(((0.,0.,0.),(1.,x,0.),", False, {"PYR_U"}),
+        (_REVOLVE_TWO_AXES, "#81= IFCDIRECTION((0.,1.));",
+         "#81= IFCDIRECTION((0.,x));", False, {"BEAM_Q"}),
+        (IFC_WORLD_TEXT, "#112= IFCDIRECTION((0.,1.,0.));",
+         "#112= IFCDIRECTION((0.,x,0.));", True, {"S_LOCAL"}),
+        (IFC_MAPPED_TEXT, "#50= IFCDIRECTION((0.,1.,0.));",
+         "#50= IFCDIRECTION((0.,x,0.));", False, {"INST_TS"}),
+        (IFC_MAPPED_TEXT, "#41= IFCCARTESIANTRANSFORMATIONOPERATOR3D($,$,#40,2.);",
+         "#41= IFCCARTESIANTRANSFORMATIONOPERATOR3D($,$,#40,x);", False,
+         {"INST_ROT"}),
+        (IFC_SDS_TEXT, "#59= IFCSWEPTDISKSOLID(#56,0.2,0.1,$,$);",
+         "#59= IFCSWEPTDISKSOLID(#56,0.2,x,$,$);", False, set()),
+    ],
+    ids=["tfs_coordinate", "revolve_axis", "placement_refdir", "operator_axis",
+         "operator_scale", "inner_radius"],
+)
+def test_ifc_malformed_slot_drops_its_solid(
+    spark, tmp_path, text, old, new, world, kept
+):
+    """A malformed coordinate in a triangulated point list drops its solid
+    instead of shifting every later CoordIndex onto the wrong vertex; a set
+    but malformed optional slot (a direction, a scale, an inner radius)
+    drops its solid instead of taking the default an unset ``$`` gets.
+    The other solids come back unchanged."""
+    assert old in text
+    clean = _product_rows(spark, tmp_path / "clean.ifc", text, world)
+    rows = _product_rows(
+        spark, tmp_path / "malformed.ifc", text.replace(old, new), world
+    )
+    assert set(rows) == kept < set(clean)
+    assert all(rows[g] == clean[g] for g in kept)
+
+
 def test_ifc_numbers_have_no_strict_cast():
     """Every number in the IFC scan is read through try_cast: a strict
     double cast appears only on a typed null literal."""
